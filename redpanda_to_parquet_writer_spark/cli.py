@@ -176,9 +176,13 @@ def collector_main(argv: list[str] | None = None) -> int:
     collector = Collector(spark, cfg, source_factory)
     run = collector.run(topics)
     for r in run.reports:
-        status = r.validation.status if r.validation else "skipped"
-        print(f"{r.topic}: rows={r.rows_written} fmt={r.fmt} "
+        v = r.validation
+        status = f"{v.status}(expected={v.expected},actual={v.actual})" if v else "skipped"
+        phases = ",".join(f"{k}:{ms}" for k, ms in sorted(r.duration_ms.items()))
+        print(f"{r.topic}: rows={r.rows_written} rows_in={r.rows_in} "
+              f"duration_ms={phases or '-'} fmt={r.fmt} "
               f"sec={r.seconds:.2f} batches={r.n_batches} "
               f"rows_per_sec={r.rows_per_sec} validation={status}")
-    print(f"total rows across {len(run.reports)} topic(s): {run.total_rows}")
+    print(f"total rows committed this run across {len(run.reports)} topic(s): "
+          f"{run.total_rows}")
     return 0

@@ -9,6 +9,19 @@ Spark shape per topic:
     ingest_available_now(source, <out>/<topic>, <ckpt>/<topic>)
 then validation (operators.validate) and the retention trim hook.
 
+Per-run contract: a run does work in proportion to its increment.
+  - The checkpoint is the offset store. `resume_offsets` is derived from
+    the sink (`existing_max_offsets`) only when the checkpoint holds no
+    offsets (first run, or checkpoint lost); otherwise it is `{}`, since
+    Spark ignores starting offsets when it resumes from a checkpoint.
+  - `TopicRunReport.rows_written` counts the rows THIS run committed to
+    the topic's base table (counted by the write itself), not the sink's
+    total; a re-run with nothing new reports 0. Batch count, rate and
+    the `durationMs` phase map come from the query's own progress.
+  - V1 compares the sink's count after the run with its count before
+    the run plus the rows committed, so lost or duplicated files show
+    up as ERROR / WARNING. Both counts run only when validation is on.
+
 Collapsed phases (built-in, SURVEY 4): offset calculation -> checkpoint;
 batching -> micro-batches; parallel date writes -> task parallelism;
 atomic writes -> commit protocol; merge/staging -> checkpointed sink +
@@ -36,9 +49,13 @@ from redpanda_to_parquet_writer_spark.operators.validate import (
     CountReport,
     external_completeness,
     internal_consistency,
+    sink_row_count,
 )
 from redpanda_to_parquet_writer_spark.streaming.ingest import ingest_available_now
-from redpanda_to_parquet_writer_spark.streaming.sink import existing_max_offsets
+from redpanda_to_parquet_writer_spark.streaming.sink import (
+    checkpoint_has_offsets,
+    existing_max_offsets,
+)
 
 
 @dataclass
@@ -49,12 +66,16 @@ class TopicRunReport:
     topic: str
     fmt: str
     seconds: float
+    #: rows this run committed to the topic's base table
     rows_written: int
     validation: CountReport | None = None
-    #: listener-observed micro-batch count / ingest rate (0 when the
-    #: source produced no progress events, e.g. an already-drained topic)
+    #: micro-batches this run executed, their input rows and ingest rate
+    #: (0 for an already-drained topic)
     n_batches: int = 0
+    rows_in: int = 0
     rows_per_sec: float = 0.0
+    #: every streaming `durationMs` phase, summed over this run's triggers
+    duration_ms: dict[str, int] = field(default_factory=dict)
 
 
 @dataclass
@@ -92,51 +113,35 @@ class Collector:
         return f"{self.cfg.output_dir}/{topic}"
 
     def run_topic(self, topic: str, sample: list[bytes] | None = None) -> TopicRunReport:
-        """One topic end-to-end: resume -> drain -> count."""
-        from redpanda_to_parquet_writer_spark.streaming.metrics import (
-            IngestMetricsListener,
-        )
-
+        """One topic end-to-end: resume -> drain -> report this run."""
         t0 = time.monotonic()
         fmt = self.topic_format(topic, sample or [])
         root = self.output_root(topic)
-        # checkpoint is the primary progress store; the Parquet-derived
-        # offsets (T1 backstop) are handed to the source factory for the
-        # checkpoint-loss case
-        resume = existing_max_offsets(self.spark, root)
-        source = self.source_factory(topic, resume)
-        listener = IngestMetricsListener().attach(self.spark)
-        query_name = f"ingest-{topic}"
-        try:
-            ingest_available_now(
-                self.spark,
-                source,
-                root,
-                f"{self.cfg.checkpoint_dir}/{topic}",
-                self.cfg,
-                query_name=query_name,
-                fmt=fmt,
-            )
-            listener.wait_quiesce(query_name=query_name)
-        finally:
-            listener.detach(self.spark)
-        try:
-            rows = self.spark.read.parquet(root).count()
-        except Exception:
-            rows = 0
-        # filter by query name: concurrent per-topic drains (ThreadPool
-        # over run_topic) share the session listener bus, so this topic
-        # must roll up ONLY its own query's batches
-        summaries = listener.summary(query_name)
-        n_batches = sum(s.n_batches for s in summaries)
-        rate = round(sum(s.rows_per_sec for s in summaries), 1)
+        checkpoint = f"{self.cfg.checkpoint_dir}/{topic}"
+        # the checkpoint is the progress store; the Parquet-derived
+        # offsets (T1 backstop) are only worth a scan when it has none
+        if checkpoint_has_offsets(self.spark, checkpoint):
+            resume = {}
+        else:
+            resume = existing_max_offsets(self.spark, root)
+        drain = ingest_available_now(
+            self.spark,
+            self.source_factory(topic, resume),
+            root,
+            checkpoint,
+            self.cfg,
+            query_name=f"ingest-{topic}",
+            fmt=fmt,
+        )
         return TopicRunReport(
             topic=topic,
             fmt=fmt,
             seconds=time.monotonic() - t0,
-            rows_written=rows,
-            n_batches=n_batches,
-            rows_per_sec=rate,
+            rows_written=drain.committed.get(root, 0),
+            n_batches=len(drain.batches),
+            rows_in=drain.rows_in,
+            rows_per_sec=drain.rows_per_sec,
+            duration_ms=drain.duration_ms,
         )
 
     def run(
@@ -147,6 +152,9 @@ class Collector:
     ) -> CollectorRun:
         """Fan out over topics, then validate (V1/V2) when enabled.
 
+        V1 per topic: the sink's row count before the run plus the rows
+        the run committed must equal its count after the run.
+
         Topics run sequentially here; each ingest is itself fully
         parallel inside Spark. Concurrent queries (ThreadPool over
         `run_topic`) are safe — separate checkpoints — when topic count
@@ -154,11 +162,14 @@ class Collector:
         """
         run = CollectorRun()
         samples = samples or {}
+        validate = not self.cfg.skip_validation
         for topic in topics:
+            root = self.output_root(topic)
+            before = sink_row_count(self.spark, root) if validate else 0
             report = self.run_topic(topic, samples.get(topic))
-            if not self.cfg.skip_validation:
+            if validate:
                 report.validation = internal_consistency(
-                    self.spark, self.output_root(topic), report.rows_written
+                    self.spark, root, before + report.rows_written
                 )
             run.reports.append(report)
         if high_watermarks and not self.cfg.skip_validation:

@@ -5,9 +5,13 @@ The reference's post-run validation:
   - external: Parquet per-partition counts == Kafka high watermarks,
     with PASS / WARNING / ERROR statuses per partition
 
-Spark-side, the written-count comes from the StreamingQueryProgress /
-writer-side counters; the high-watermark map comes from the broker admin
-API (driver-side). Both checks are single projected-scan aggregations.
+Spark-side, the writer's claim is per run: the sink's count before the
+run plus the rows the run's writes committed (counted by an observed
+metric on each write, `streaming.sink.write_date_partitioned`). V1
+compares it with the count after the run, so a file lost or duplicated
+between write and validation shows as ERROR / WARNING. The
+high-watermark map comes from the broker admin API (driver-side). Both
+checks are single projected-scan aggregations.
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from redpanda_to_parquet_writer_spark.streaming.sink import read_sink
 
 PASS = "PASS"
 WARNING = "WARNING"  # sink has MORE than source claims (dupes suspected)
@@ -33,9 +39,19 @@ class CountReport:
         return self.status == PASS
 
 
+def sink_row_count(spark: SparkSession, root: str) -> int:
+    """Rows in the sink at `root`; 0 while it holds no data file."""
+    df = read_sink(spark, root)
+    return 0 if df is None else df.count()
+
+
 def internal_consistency(spark: SparkSession, root: str, written_count: int) -> CountReport:
-    """V1: writer-claimed count vs re-read count (collector:1479-1480)."""
-    actual = spark.read.parquet(root).count()
+    """V1: writer-claimed count vs re-read count (collector:1479-1480).
+
+    `written_count` is the rows the sink should hold: for a collector
+    run, its count before the run plus the rows the run committed.
+    """
+    actual = sink_row_count(spark, root)
     if actual == written_count:
         status = PASS
     elif actual > written_count:

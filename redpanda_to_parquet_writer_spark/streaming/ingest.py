@@ -21,11 +21,19 @@ so the stream carries the permissive envelope (raw value bytes/string);
 `foreachBatch` re-infers the payload schema per micro-batch, flattens,
 and routes schema versions — each micro-batch may differ, the stream
 never has to restart.
+
+Per-run contract: a micro-batch converts its payloads once, reads the
+sink once (drift fingerprint and anti-join share that frame) and counts
+the rows it commits as part of the write. `ingest_available_now` returns
+those counts with the query's own progress (`recentProgress`), so a
+caller learns what this run did without re-reading the sink or waiting
+on listener events.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,9 +48,25 @@ from redpanda_to_parquet_writer_spark.operators.flatten import (
 )
 from redpanda_to_parquet_writer_spark.streaming.sink import (
     merge_dedup_append,
+    read_sink,
     with_event_date,
     write_date_partitioned,
 )
+
+
+def envelope_values(batch_df: DataFrame, fmt: str = "json") -> DataFrame:
+    """Kafka-shaped batch -> envelope whose `value` holds JSON text or
+    bytes: MessagePack payloads (`fmt == "msgpack"`) are converted to
+    JSON strings through the Arrow-batched UDF (C msgpack when installed,
+    the pure-stdlib codec otherwise)."""
+    env = project_kafka_envelope(batch_df) if "topic" in batch_df.columns else batch_df
+    if fmt == "msgpack":
+        from redpanda_to_parquet_writer_spark.operators.decode import (
+            msgpack_to_json_udf,
+        )
+
+        env = env.withColumn("value", msgpack_to_json_udf()(F.col("value")))
+    return env
 
 
 def prepare_envelope_batch(
@@ -60,18 +84,11 @@ def prepare_envelope_batch(
     When `payload_schema` is None it is inferred from a bounded sample of
     this batch (the per-micro-batch dynamic schema path). `fmt` is the
     topic's sampled verdict (S5): MessagePack payloads convert to JSON
-    strings through the Arrow-batched UDF first (C msgpack when
-    installed, the pure-stdlib codec otherwise), then share the JSON
+    strings first (`envelope_values`), then share the JSON
     inference/decode path — one decoder per topic, never a per-row
     format cascade (collector:223-256).
     """
-    env = project_kafka_envelope(batch_df) if "topic" in batch_df.columns else batch_df
-    if fmt == "msgpack":
-        from redpanda_to_parquet_writer_spark.operators.decode import (
-            msgpack_to_json_udf,
-        )
-
-        env = env.withColumn("value", msgpack_to_json_udf()(F.col("value")))
+    env = envelope_values(batch_df, fmt)
     if payload_schema is None:
         sample = [
             r["value"]
@@ -98,6 +115,7 @@ def make_merge_batch_writer(
     cfg: EngineConfig,
     payload_schema: StructType | None = None,
     fmt: str = "json",
+    committed: dict[str, int] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body: prepare + schema-version routing + dedup merge.
 
@@ -107,38 +125,81 @@ def make_merge_batch_writer(
     corrupting the base, exactly the reference's `topic_v{N}.parquet`
     fallback (collector:435-465, 795-819). Readers union versions with
     mergeSchema (U1).
+
+    The base table is read once per batch and that frame serves both the
+    fingerprint and the anti-join. Rows each batch commits are added to
+    `committed` (target table -> rows) when given.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # dynamic-schema path runs TWO actions over the batch (schema
-        # sample, then the write) — persist so the source is scanned
-        # once per micro-batch, not once per action
+        # convert payloads before persisting: the dynamic-schema path
+        # reads the batch more than once (schema sample, the anti-join's
+        # distinct dates, the write), and each read then hits the cached,
+        # already-converted rows instead of re-running the source and UDF
+        env = envelope_values(batch_df, fmt)
         cached = payload_schema is None
         if cached:
-            batch_df.persist()
+            env.persist()
         try:
-            prepared = prepare_envelope_batch(
-                spark, batch_df, payload_schema, fmt=fmt
-            )
+            prepared = prepare_envelope_batch(spark, env, payload_schema)
             if not prepared.columns:
                 return
             target = output_root
-            try:
-                base_schema = spark.read.parquet(output_root).drop("date").schema
-                ours = prepared.drop("date").schema
-                if schema_fingerprint(base_schema) != schema_fingerprint(ours):
-                    target = f"{output_root}_v{schema_fingerprint(ours)}"
-            except Exception:
-                pass  # base doesn't exist yet
+            existing = read_sink(spark, output_root)
+            if existing is not None:
+                ours = schema_fingerprint(prepared.drop("date").schema)
+                if schema_fingerprint(existing.drop("date").schema) != ours:
+                    target = f"{output_root}_v{ours}"
+                    existing = read_sink(spark, target)
             if cfg.skip_dedup:
-                write_date_partitioned(prepared, target, cfg, mode="append")
+                rows = write_date_partitioned(prepared, target, cfg, mode="append")
             else:
-                merge_dedup_append(spark, prepared, target, cfg=cfg)
+                rows = merge_dedup_append(
+                    spark, prepared, target, cfg=cfg, existing=existing
+                )
+            if committed is not None:
+                committed[target] = committed.get(target, 0) + rows
         finally:
             if cached:
-                batch_df.unpersist()
+                env.unpersist()
 
     return write_batch
+
+
+@dataclass
+class DrainReport:
+    """What one `ingest_available_now` drain did."""
+
+    #: rows committed per target table: the base root, plus any
+    #: `<root>_v<fingerprint>` table a drifted batch was routed to
+    committed: dict[str, int]
+    #: the query's `recentProgress`, one entry per trigger
+    progress: list
+
+    @property
+    def batches(self) -> list:
+        """Progress of the triggers that ran a micro-batch, one per batch
+        id (a trigger that found no new data has no `addBatch` phase)."""
+        by_id = {p.batchId: p for p in self.progress if "addBatch" in p.durationMs}
+        return [by_id[b] for b in sorted(by_id)]
+
+    @property
+    def rows_in(self) -> int:
+        return sum(p.numInputRows for p in self.batches)
+
+    @property
+    def duration_ms(self) -> dict[str, int]:
+        """Every `durationMs` phase, summed over the drain's triggers."""
+        out: dict[str, int] = {}
+        for p in self.progress:
+            for phase, ms in p.durationMs.items():
+                out[phase] = out.get(phase, 0) + int(ms)
+        return out
+
+    @property
+    def rows_per_sec(self) -> float:
+        ms = sum(p.durationMs.get("triggerExecution", 0) for p in self.batches)
+        return round(self.rows_in / (ms / 1000.0), 1) if ms else 0.0
 
 
 def ingest_available_now(
@@ -150,18 +211,25 @@ def ingest_available_now(
     payload_schema: StructType | None = None,
     query_name: str | None = None,
     fmt: str = "json",
-) -> None:
+) -> DrainReport:
     """Drain everything available from a streaming source into the
     date-partitioned table, then stop (T1+T2+T5).
 
     `source` is any streaming DataFrame (Kafka via sources.kafka, or a
     file stream in tests) already in (or convertible to) envelope shape.
     `query_name` labels the streaming query (progress events, metrics
-    listener, Spark UI) — concurrent per-topic drains each get their own
-    name so per-topic metrics don't cross-contaminate.
+    listener, Spark UI).
+
+    Returns what this drain committed and the query's progress. Both
+    belong to this query alone, so concurrent per-topic drains never see
+    each other's numbers, and `recentProgress` is complete once
+    `awaitTermination` returns — no listener wait.
     """
     cfg = cfg or EngineConfig()
-    writer = make_merge_batch_writer(spark, output_root, cfg, payload_schema, fmt=fmt)
+    committed: dict[str, int] = {}
+    writer = make_merge_batch_writer(
+        spark, output_root, cfg, payload_schema, fmt=fmt, committed=committed
+    )
     stream = source.writeStream.foreachBatch(writer)
     if query_name:
         stream = stream.queryName(query_name)
@@ -171,6 +239,7 @@ def ingest_available_now(
         .start()
     )
     query.awaitTermination()
+    return DrainReport(committed=committed, progress=query.recentProgress)
 
 
 def dedup_stream(

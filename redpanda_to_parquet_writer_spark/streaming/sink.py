@@ -14,13 +14,18 @@ Reference parity (SURVEY 2.1/2.9):
   - T1 offset recovery: `existing_max_offsets` re-derives per-partition
     resume offsets by scanning ONLY the key columns of the output
     (projected read, S7 — Catalyst prunes to 2 columns), exactly the
-    reference's `get_existing_max_offsets` (collector:468-530). Used as
-    the cross-run backstop when no checkpoint exists.
+    reference's `get_existing_max_offsets` (collector:468-530). It is the
+    checkpoint-loss backstop only: while `checkpoint_has_offsets` holds,
+    Spark resumes from the checkpoint and the scan is skipped.
+
+Every write returns the rows it committed, counted by a `DataFrame.observe`
+metric on the written frame (no extra Spark job), so callers account per
+run without re-counting the sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from redpanda_to_parquet_writer_spark.config import EngineConfig
@@ -43,8 +48,9 @@ def write_date_partitioned(
     cfg: EngineConfig | None = None,
     mode: str = "append",
     files_per_date: int = 1,
-) -> None:
-    """Write a prepared (date-columned) frame as hive-partitioned Parquet.
+) -> int:
+    """Write a prepared (date-columned) frame as hive-partitioned Parquet
+    and return the number of rows committed.
 
     zstd + large row groups per the reference's compression findings
     (collector:97-99); clustered by (partition, offset) inside each file
@@ -57,6 +63,11 @@ def write_date_partitioned(
     (the salt spreads a date over that many tasks).
     """
     cfg = cfg or EngineConfig()
+    # count on the way in: an observed node placed between the sort and
+    # the write would change how the optimizer plans that sort, and with
+    # it the files written
+    written = Observation()
+    df = df.observe(written, F.count(F.lit(1)).alias("rows"))
     sort_cols = [c for c in ("kafka_topic", "kafka_partition", "kafka_offset") if c in df.columns]
     if "date" in df.columns:
         keys = [F.col("date")]
@@ -71,6 +82,27 @@ def write_date_partitioned(
         .mode(mode)
         .parquet(root)
     )
+    return _observed_rows(written)
+
+
+def _observed_rows(observation: Observation) -> int:
+    """The row count an `Observation` collected during its write.
+
+    When AQE finds an input empty at runtime (e.g. every row of a
+    reprocessed batch removed by the anti-join) it replaces that subplan
+    with an empty relation, and the observed node goes with it. The
+    observation then completes with an empty row, which
+    `Observation.get` cannot convert; read the JVM row directly and
+    treat an empty one as zero rows.
+    """
+    row = observation._jo.getRow()
+    return int(row.get(0)) if row.length() else 0
+
+
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path`."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _sink_exists(spark: SparkSession, root: str) -> bool:
@@ -85,9 +117,7 @@ def _sink_exists(spark: SparkSession, root: str) -> bool:
     before the first batch) is also a first write — reading it would
     fail schema inference, not signal duplicates.
     """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, root)
     if not fs.exists(hpath):
         return False
     it = fs.listFiles(hpath, True)  # recursive, files only
@@ -98,6 +128,30 @@ def _sink_exists(spark: SparkSession, root: str) -> bool:
     return False
 
 
+def read_sink(spark: SparkSession, root: str) -> DataFrame | None:
+    """The sink as a DataFrame, or None while it holds no data file.
+
+    One listing and one footer read; callers that need the sink more
+    than once (schema fingerprint, then anti-join) share this frame.
+    """
+    return spark.read.parquet(root) if _sink_exists(spark, root) else None
+
+
+def checkpoint_has_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
+    """True iff `<checkpoint_dir>/offsets` holds a batch file (Hadoop FS
+    probe, no Spark job).
+
+    Spark names offset-log entries by batch id. While one exists a
+    restarted query resumes from the checkpoint and ignores the source's
+    starting offsets; without one (first run, or checkpoint lost) the
+    sink-derived `existing_max_offsets` is the only resume point.
+    """
+    fs, hpath = _fs(spark, f"{checkpoint_dir}/offsets")
+    return fs.exists(hpath) and any(
+        st.getPath().getName().isdigit() for st in fs.listStatus(hpath)
+    )
+
+
 def existing_max_offsets(spark: SparkSession, root: str) -> dict[int, int]:
     """Per-partition max persisted offset from the sink itself (T1).
 
@@ -105,9 +159,9 @@ def existing_max_offsets(spark: SparkSession, root: str) -> dict[int, int]:
     resume recovery (collector:468-530), kept as the backstop for
     checkpoint loss (SURVEY 7.3 risk 2).
     """
-    if not _sink_exists(spark, root):
+    df = read_sink(spark, root)
+    if df is None:
         return {}
-    df = spark.read.parquet(root)
     rows = (
         df.select("kafka_partition", "kafka_offset")
         .groupBy("kafka_partition")
@@ -122,12 +176,9 @@ def _pruned_partition_bytes(spark: SparkSession, root: str, dates: list[str]) ->
     dirs — a driver-side FS listing, zero Spark jobs. Used to size-gate
     the merge-dedup broadcast.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     total = 0
     for d in dates:
-        hpath = jvm.org.apache.hadoop.fs.Path(f"{root}/date={d}")
-        fs = hpath.getFileSystem(conf)
+        fs, hpath = _fs(spark, f"{root}/date={d}")
         if not fs.exists(hpath):
             continue
         it = fs.listFiles(hpath, True)
@@ -144,8 +195,12 @@ def dedup_frame_for_merge(
     root: str,
     keys: tuple[str, ...] = ("kafka_partition", "kafka_offset"),
     cfg: EngineConfig | None = None,
+    existing: DataFrame | None = None,
 ) -> DataFrame:
     """Build the anti-joined frame for an idempotent merge-append (J2).
+
+    `existing` is the sink as already read by the caller (`read_sink`);
+    when None the sink at `root` is read here.
 
     The merge-phase dedup contract (collector:1003-1010) must hold at ANY
     history size, so the existing side is:
@@ -168,7 +223,8 @@ def dedup_frame_for_merge(
     shuffle path is used unconditionally (never broadcast blind).
     """
     cfg = cfg or EngineConfig()
-    existing = spark.read.parquet(root)
+    if existing is None:
+        existing = spark.read.parquet(root)
     broadcastable = False
     if "date" in new_df.columns and "date" in existing.columns:
         dates = sorted(
@@ -190,22 +246,27 @@ def merge_dedup_append(
     root: str,
     keys: tuple[str, ...] = ("kafka_partition", "kafka_offset"),
     cfg: EngineConfig | None = None,
-) -> None:
+    existing: DataFrame | None = None,
+) -> int:
     """Idempotent append: anti-join new rows against persisted keys (J2).
+    Returns the rows committed (those that survived the anti-join).
 
     Run inside foreachBatch or as the batch-mode write path when
     SKIP_DEDUPLICATION=false; see `dedup_frame_for_merge` for the
-    date-pruned / size-gated anti-join shape.
+    date-pruned / size-gated anti-join shape. `existing` is the sink as
+    already read by the caller (`read_sink`); when None it is read here.
 
     Only a missing sink path skips the anti-join (first write); any
     other read failure propagates — swallowing it would silently break
     idempotency.
     """
-    if _sink_exists(spark, root):
-        deduped = dedup_frame_for_merge(spark, new_df, root, keys, cfg)
-    else:
+    if existing is None:
+        existing = read_sink(spark, root)
+    if existing is None:
         deduped = new_df  # first write: nothing to dedup against
-    write_date_partitioned(deduped, root, cfg, mode="append")
+    else:
+        deduped = dedup_frame_for_merge(spark, new_df, root, keys, cfg, existing)
+    return write_date_partitioned(deduped, root, cfg, mode="append")
 
 
 def export_reference_layout(

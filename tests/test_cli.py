@@ -39,6 +39,29 @@ def test_collector_cli_writes_topics(spark, warehouse, capsys):
         assert spark.read.parquet(str(warehouse / topic)).count() == n
 
 
+def test_collector_cli_reports_per_run_rows_and_v1(spark, tmp_path, capsys):
+    """The summary line per topic carries this run's committed rows, the
+    full durationMs phase map and V1's expected/actual counts; a re-run
+    with nothing new commits 0 and still passes V1."""
+    src = tmp_path / "src"
+    _envelope_df(spark, n=24).write.parquet(str(src / "topic_a"))
+    argv = [
+        "--file-source", str(src),
+        "--output-dir", str(tmp_path / "out"),
+        "--checkpoint-dir", str(tmp_path / "ckpt"),
+    ]
+    assert collector_main(argv) == 0
+    (line,) = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("topic_a:")]
+    assert "rows=24 rows_in=24 " in line
+    assert "addBatch:" in line and "triggerExecution:" in line
+    assert "validation=PASS(expected=24,actual=24)" in line
+
+    assert collector_main(argv) == 0
+    (line,) = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("topic_a:")]
+    assert "rows=0 rows_in=0 " in line
+    assert "validation=PASS(expected=24,actual=24)" in line
+
+
 def test_reader_cli_analyze(warehouse, capsys):
     rc = reader_main(["--base-dir", str(warehouse)])
     assert rc == 0

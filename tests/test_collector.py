@@ -6,7 +6,7 @@ import pytest
 
 from redpanda_to_parquet_writer_spark.collector import Collector
 from redpanda_to_parquet_writer_spark.config import EngineConfig
-from redpanda_to_parquet_writer_spark.operators.validate import PASS
+from redpanda_to_parquet_writer_spark.operators.validate import ERROR, PASS, WARNING
 
 from tests.test_streaming_ingest import ENVELOPE_COLS, _envelope_df
 
@@ -38,14 +38,96 @@ def test_multi_topic_run(spark, tmp_path, collector):
     assert [r.topic for r in run.reports] == ["topic_a", "topic_b"]
     assert [r.rows_written for r in run.reports] == [30, 40]
     assert run.total_rows == 70
+    assert _sink_counts(spark, collector, ["topic_a", "topic_b"]) == [30, 40]
     assert all(r.validation.status == PASS for r in run.reports)
+    assert [(r.validation.expected, r.validation.actual) for r in run.reports] == [
+        (30, 30),
+        (40, 40),
+    ]
     assert all(r.fmt == "json" for r in run.reports)  # JSON payloads -> json verdict
-    # listener-fed throughput: every fresh topic saw >= 1 micro-batch
+    # progress-fed throughput: every fresh topic saw >= 1 micro-batch
     assert all(r.n_batches >= 1 and r.rows_per_sec > 0 for r in run.reports)
+    assert [r.rows_in for r in run.reports] == [30, 40]
+    # the full durationMs phase map, not a 3-key subset
+    for r in run.reports:
+        assert {"addBatch", "triggerExecution", "latestOffset", "walCommit"} <= set(
+            r.duration_ms
+        )
 
-    # re-run: checkpointed -> no new rows, still consistent
+    # re-run: checkpointed -> this run commits nothing, sink unchanged,
+    # V1 still PASS (before 30/40 + 0 committed == after)
     run2 = collector.run(["topic_a", "topic_b"])
-    assert run2.total_rows == 70
+    assert [r.rows_written for r in run2.reports] == [0, 0]
+    assert run2.total_rows == 0
+    assert _sink_counts(spark, collector, ["topic_a", "topic_b"]) == [30, 40]
+    assert all(r.validation.status == PASS for r in run2.reports)
+    assert all(r.n_batches == 0 for r in run2.reports)
+
+
+def _sink_counts(spark, collector, topics):
+    return [spark.read.parquet(collector.output_root(t)).count() for t in topics]
+
+
+def test_incremental_run_reports_only_its_rows(spark, tmp_path, collector):
+    """A second run over a grown source commits, and reports, only the
+    new rows; V1 checks them against the count before the run."""
+    src = str(tmp_path / "src_inc")
+    _envelope_df(spark, n=30).write.parquet(src)
+    collector._test_sources["inc"] = src
+    assert collector.run(["inc"]).total_rows == 30
+
+    _envelope_df(spark, n=12, start_offset=30).write.mode("append").parquet(src)
+    (report,) = collector.run(["inc"]).reports
+    assert report.rows_written == 12 and report.rows_in == 12
+    assert _sink_counts(spark, collector, ["inc"]) == [42]
+    assert (report.validation.status, report.validation.expected) == (PASS, 42)
+
+
+@pytest.mark.parametrize(
+    "damage, status",
+    [("delete", ERROR), ("duplicate", WARNING)],
+)
+def test_v1_flags_sink_damaged_between_drain_and_validation(
+    spark, tmp_path, collector, monkeypatch, damage, status
+):
+    """V1 can fail: a committed sink file removed (or copied) after the
+    drain and before validation shows as ERROR (WARNING), off by exactly
+    that file's rows."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from redpanda_to_parquet_writer_spark import collector as collector_mod
+
+    src = str(tmp_path / "src_v1")
+    _envelope_df(spark, n=48).write.parquet(src)
+    collector._test_sources["v1"] = src
+    assert collector.run(["v1"]).reports[0].validation.status == PASS
+
+    _envelope_df(spark, n=24, start_offset=48).write.mode("append").parquet(src)
+    root = collector.output_root("v1")
+    damaged = {}
+    drain = collector_mod.ingest_available_now
+
+    def drain_then_damage(*args, **kwargs):
+        result = drain(*args, **kwargs)
+        victim = sorted(glob.glob(f"{root}/date=*/*.parquet"))[0]
+        damaged["rows"] = pq.ParquetFile(victim).metadata.num_rows
+        if damage == "delete":
+            os.remove(victim)
+        else:
+            shutil.copy(victim, victim.replace(".parquet", "-copy.parquet"))
+        return result
+
+    monkeypatch.setattr(collector_mod, "ingest_available_now", drain_then_damage)
+    (report,) = collector.run(["v1"]).reports
+    assert report.rows_written == 24
+    v1 = report.validation
+    assert v1.status == status, v1
+    assert v1.expected == 72
+    assert abs(v1.expected - v1.actual) == damaged["rows"] > 0
 
 
 def test_concurrent_topic_drains(spark, tmp_path, collector):
@@ -67,7 +149,9 @@ def test_concurrent_topic_drains(spark, tmp_path, collector):
     by_topic = {r.topic: r for r in reports}
     for topic, n in counts.items():
         assert by_topic[topic].rows_written == n
+        assert _sink_counts(spark, collector, [topic]) == [n]
         assert by_topic[topic].n_batches >= 1
+        assert by_topic[topic].rows_in == n
         assert by_topic[topic].rows_per_sec > 0
 
 
@@ -106,10 +190,42 @@ def test_checkpoint_loss_recovery_via_offset_backstop(spark, tmp_path):
 
     c = Collector(spark, cfg, factory)
     assert c.run(["t"]).total_rows == 40
+    assert spark.read.parquet(c.output_root("t")).count() == 40
 
     shutil.rmtree(str(tmp_path / "ckpt"))  # simulate checkpoint loss
     run2 = c.run(["t"])
-    assert run2.total_rows == 40  # backstop resumed past everything written
+    # backstop resumed past everything written: nothing new committed,
+    # and the sink still holds exactly the first run's rows
+    assert run2.total_rows == 0
+    assert spark.read.parquet(c.output_root("t")).count() == 40
+
+
+def test_resume_map_is_a_checkpoint_loss_backstop_only(spark, tmp_path):
+    """The source factory gets `{}` while the topic's checkpoint holds
+    offsets (Spark resumes from it and would ignore starting offsets),
+    and the sink-derived per-partition max offsets once it is gone."""
+    import shutil
+
+    cfg = EngineConfig(
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        skip_validation=True,
+    )
+    src = str(tmp_path / "src")
+    _envelope_df(spark, n=40).write.parquet(src)
+    seen = []
+
+    def factory(topic, resume_offsets):
+        seen.append(dict(resume_offsets))
+        return spark.readStream.schema(ENVELOPE_COLS).parquet(src)
+
+    c = Collector(spark, cfg, factory)
+    c.run(["t"])  # first run: no checkpoint, no sink
+    c.run(["t"])  # checkpoint with offsets: no resume scan
+    shutil.rmtree(str(tmp_path / "ckpt" / "t"))
+    c.run(["t"])  # checkpoint lost: the parquet-derived map
+    # partitions 0..3 round-robin over offsets 0..39: max is 36+p
+    assert seen == [{}, {}, {0: 36, 1: 37, 2: 38, 3: 39}]
 
 
 def _part_rows(partition: int, offsets: list[int]) -> list[tuple]:
@@ -193,6 +309,7 @@ def test_collector_partition_replay_with_gaps_and_trim_cycle(spark, tmp_path):
     n1 = sum(len(o) for o in seg1.values())
     assert run1.total_rows == n1
     root = c.output_root("md")
+    assert spark.read.parquet(root).count() == n1
     # the resume map recovers the per-partition MAX, gaps and disorder
     # notwithstanding — this is what the next cycle starts from
     assert existing_max_offsets(spark, root) == {0: 9, 1: 15, 2: 8}
@@ -217,7 +334,9 @@ def test_collector_partition_replay_with_gaps_and_trim_cycle(spark, tmp_path):
 
     run2 = c.run(["md"])
     n2 = sum(len(o) for o in seg2_new.values())
-    assert run2.total_rows == n1 + n2, "replayed tail leaked past the resume map"
+    # per run: exactly the new records; the sink holds both segments once
+    assert run2.total_rows == n2, "replayed tail leaked past the resume map"
+    assert spark.read.parquet(root).count() == n1 + n2
     assert existing_max_offsets(spark, root) == {0: 11, 1: 16, 2: 12}
 
     # synthetic high watermarks = per-partition expected counts: exact

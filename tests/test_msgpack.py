@@ -165,6 +165,7 @@ def test_collector_ingests_msgpack_topic(spark, tmp_path):
     assert report.rows_written == 30
 
     out = spark.read.parquet(f"{cfg.output_dir}/md_mp")
+    assert out.count() == 30
     cols = set(out.columns)
     assert {"symbol", "price", "volume", "event_type"} <= cols
     got = {r["symbol"] for r in out.select("symbol").distinct().collect()}

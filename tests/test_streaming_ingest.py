@@ -390,6 +390,52 @@ def test_crash_mid_write_direct_path_committer_atomicity(spark, tmp_path, cfg):
     assert _rows(spark, out) == baseline
 
 
+def test_writes_return_rows_committed(spark, tmp_path, cfg):
+    """Each write returns the rows it committed (an observed count on
+    the written frame): all rows on a first write, only the anti-join's
+    survivors on an overlapping merge, 0 when everything is a re-delivery."""
+    from redpanda_to_parquet_writer_spark.streaming.sink import write_date_partitioned
+
+    out = str(tmp_path / "table")
+    first = with_event_date(flatten_via_pipeline(spark, _envelope_df(spark, n=40)))
+    assert write_date_partitioned(first, out, cfg) == 40
+    overlap = with_event_date(
+        flatten_via_pipeline(spark, _envelope_df(spark, n=40, start_offset=25))
+    )
+    assert merge_dedup_append(spark, overlap, out, cfg=cfg) == 25
+    assert merge_dedup_append(spark, overlap, out, cfg=cfg) == 0
+    assert spark.read.parquet(out).count() == 65
+
+
+def test_observed_rows_reads_an_empty_row_as_zero(spark):
+    """If AQE replaces an empty input with an empty relation, the
+    observed node is dropped and the observation completes with an
+    empty row; that means no rows were written, not an error."""
+    import types
+
+    from redpanda_to_parquet_writer_spark.streaming.sink import _observed_rows
+
+    empty = spark._jvm.org.apache.spark.sql.Row.empty()
+    dropped = types.SimpleNamespace(_jo=types.SimpleNamespace(getRow=lambda: empty))
+    assert _observed_rows(dropped) == 0
+
+
+def test_ingest_returns_drain_report(spark, tmp_path, cfg):
+    """`ingest_available_now` reports this drain's committed rows per
+    target and its own progress; a caught-up re-run commits nothing."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "table")
+    _envelope_df(spark, n=50, with_null_ts=4).write.parquet(src)
+    stream = spark.readStream.schema(ENVELOPE_COLS).parquet(src)
+    drain = ingest_available_now(spark, stream, out, cfg.checkpoint_dir, cfg)
+    assert drain.committed == {out: 46}  # null-ts rows are not committed
+    assert drain.rows_in == 50 and len(drain.batches) >= 1
+    assert drain.duration_ms["addBatch"] >= 0 and drain.rows_per_sec > 0
+
+    again = ingest_available_now(spark, stream, out, cfg.checkpoint_dir, cfg)
+    assert again.committed == {} and again.batches == [] and again.rows_in == 0
+
+
 def test_merge_dedup_raises_on_corrupt_sink(spark, tmp_path, cfg):
     """ADVICE r01: a transient/corrupt read of the existing sink must
     PROPAGATE (not silently disable the anti-join backstop and append
