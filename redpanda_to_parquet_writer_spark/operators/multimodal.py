@@ -1,29 +1,27 @@
 """Multimodal (binary) column operators.
 
 Training-data pipelines carry image/audio/video as opaque `binary`
-columns with typed metadata. This module provides the real Spark
-plumbing — schemas, partition-preserving `mapInPandas` stages with bounded
-Arrow batch sizes, deterministic metadata extraction — plus REAL
-library-free codecs/probes for every major container, all oracle-gated
-in plans/multimodal_queries.py:
+columns with typed metadata. This module provides the Spark plumbing
+(schemas, partition-preserving `mapInPandas` stages with bounded Arrow
+batch sizes, deterministic metadata extraction) and library-free
+codecs and probes, pure stdlib/numpy, all oracle-gated in
+plans/multimodal_queries.py:
 
-  - WAV: full codec (stdlib `wave`, container + 16-bit PCM)
-  - PNG: full codec (`zlib`+`struct`: chunk walk, CRC check, inflate,
-    all five scanline filters) for gray8 AND truecolor RGB8
-  - GIF: full codec (variable-width GIF-LZW, grayscale palette)
-  - mp4: box-tree structure probe (brand, mvhd, tracks, mdat)
-  - JPEG: marker-stream probe (SOF dims/components, table counts, scan
-    accounting), a full baseline gray8 codec (numpy 8x8 DCT, Annex K
-    tables, canonical Huffman — `encode_jpeg_gray8`/`decode_jpeg_gray8`),
-    AND a full baseline COLOR codec (JFIF YCbCr transform, 4:2:0 chroma
-    subsampling, interleaved MCUs, Annex K chroma tables —
-    `encode_jpeg_color`/`decode_jpeg_color`)
+  - WAV: 16-bit PCM codec (stdlib `wave`).
+  - PNG: codec for gray8, RGB8, RGBA8 and paletted images (chunk walk,
+    CRC check, inflate, all five scanline filters, Adam7).
+  - GIF: gray and RGB codec (variable-width GIF-LZW).
+  - TIFF: codec for uncompressed, PackBits and LZW strips, plus a probe.
+  - WebP: lossless (VP8L) codec and a container probe.
+  - JPEG: baseline sequential (SOF0) and progressive (SOF2) codecs for
+    gray and YCbCr color (4:2:0, 4:2:2, 4:4:4; DRI/RSTn restarts in
+    sequential frames), sharing one frame parser, scan decoders and
+    pixel tail, plus a marker-stream probe.
+  - Video: MJPEG streams and AVI-MJPG containers split, demux and
+    decode with the JPEG codec; mp4 gets a box-tree structure probe.
 
-Only mp4/avi video-frame decode stays stubbed — compressed video
-(H.264 etc.) genuinely needs a codec library; the stub raises
-NotImplementedError unless a library-backed codec is injected. The
-pipeline shape (what runs where, batch sizes, schema contracts) is
-real and tested for every media type.
+Formats without a codec here (lossy WebP/VP8, H.264 video) decode
+through a codec callable passed to `map_media_batches`.
 
 Scale notes: media blobs make rows huge — the mapInPandas stages are
 narrow (no shuffle), and `maxRecordsPerBatch` should be lowered so an
@@ -139,34 +137,6 @@ def with_media_metadata(
     )
 
 
-def decode_image_stub(data: bytes) -> tuple[int, int, int]:
-    """Decode (width, height, channels) from image bytes.
-
-    STUB for formats beyond the library-free codecs only (now just
-    lossy WebP/VP8 pixel data): inject a real codec via
-    `map_media_batches(codec=...)`. PNG (gray8/RGB8/paletted/RGBA),
-    GIF, baseline AND progressive (SOF2) JPEG gray+color, TIFF
-    (none/PackBits/LZW strips), and WebP-LOSSLESS (VP8L subset) all
-    decode fully library-free (`decode_png_gray8`/`decode_png_rgb8`/
-    `decode_png_palette`, `decode_gif_gray8`, `decode_jpeg_gray8`/
-    `decode_jpeg_color`/`decode_jpeg_gray8_progressive`/
-    `decode_jpeg_color_progressive`, `decode_tiff`,
-    `decode_webp_lossless`), and JPEG/TIFF/WebP structure probes run
-    without decoding (`probe_jpeg`/`probe_tiff`/`probe_webp`).
-    """
-    raise NotImplementedError(
-        "no library-free codec for this image format (lossy WebP/VP8 "
-        "pixel data needs an imaging library); PNG/GIF, baseline+"
-        "progressive JPEG gray+color, TIFF and lossless WebP (VP8L) "
-        "decode library-free (see decode_png_gray8 / decode_png_rgb8 / "
-        "decode_png_palette / decode_gif_gray8 / decode_jpeg_gray8 / "
-        "decode_jpeg_color / decode_jpeg_gray8_progressive / "
-        "decode_jpeg_color_progressive / decode_tiff / "
-        "decode_webp_lossless / probe_jpeg / probe_tiff / probe_webp); "
-        "inject a codec callable into map_media_batches"
-    )
-
-
 DECODED_IMAGE_SCHEMA = StructType(
     [
         StructField("width", LongType()),
@@ -180,16 +150,15 @@ def map_media_batches(
     df: DataFrame,
     binary_col: str,
     out_schema: StructType,
-    codec: Callable | None = None,
+    codec: Callable,
     passthrough: list[str] | None = None,
     on_error: str = "raise",
 ) -> DataFrame:
     """Arrow-batched media transform: the mapInPandas plumbing.
 
-    `codec(bytes) -> tuple` fills one row of `out_schema`; None uses the
-    stub (raises, documenting the dependency). Batch shape: pandas
-    DataFrames with the binary column as Python bytes; passthrough
-    columns are carried unchanged. Partition-preserving — no shuffle.
+    `codec(bytes) -> tuple` fills one row of `out_schema`. Batch shape:
+    pandas DataFrames with the binary column as Python bytes;
+    passthrough columns are carried unchanged. Partition-preserving — no shuffle.
 
     `on_error`: "raise" fails the job on the first undecodable blob (the
     default — silent data loss must be opted into); "null" emits NULLs
@@ -199,7 +168,6 @@ def map_media_batches(
     """
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    codec = codec or decode_image_stub
     passthrough = passthrough or [c for c in df.columns if c != binary_col]
     result_schema = StructType(
         [f for f in df.schema.fields if f.name in passthrough] + list(out_schema.fields)
@@ -224,20 +192,6 @@ def map_media_batches(
             yield out
 
     return df.mapInPandas(run, result_schema)
-
-
-def frame_sample_stub(data: bytes, every_n: int = 30) -> list[bytes]:
-    """Sample COMPRESSED-container video frames (mp4/avi with H.264
-    etc.). STUB: inter-frame codecs require a video library
-    (ffmpeg/cv2) to demux+decode. MJPEG streams split+decode fully
-    library-free (`split_mjpeg`/`sample_mjpeg_gray8`), and raw frame
-    streams go through `frame_sample_gray8_batches` below — both
-    real."""
-    raise NotImplementedError(
-        "compressed video (H.264/H.265) frame sampling requires "
-        "ffmpeg/opencv; MJPEG streams decode library-free via "
-        "split_mjpeg/sample_mjpeg_gray8"
-    )
 
 
 @_malformed_raises_value_error
@@ -1929,8 +1883,8 @@ def sample_mjpeg_gray8(
 # plain tagged-chunk format (little-endian, even-padded), so a writer,
 # a structure prober, and a frame demuxer are all stdlib `struct`
 # work — composed with the real JPEG codec this gives a full
-# container-to-pixels video path; only inter-frame codecs (H.264+)
-# keep the demux-and-decode stub.
+# container-to-pixels video path; inter-frame codecs (H.264+) need a
+# codec library.
 
 
 def _riff_chunk(tag: bytes, body: bytes) -> bytes:
@@ -2111,7 +2065,7 @@ def frame_sample_gray8_batches(
     """REAL video frame sampling — keep every `every_n`-th frame of a raw
     gray8 frame stream (row-major w*h bytes per frame, frames
     concatenated) via numpy strided slicing, no video library. Container
-    formats still need the stubbed demuxer first; this is the
+    formats need demuxing and decoding first; this is the
     post-decode sampling stage, Arrow-batched, shuffle-free. Emits exact
     integer features (per-frame pixel sums) so a deterministic generator
     is closed-form verifiable.
@@ -2410,9 +2364,7 @@ def encode_jpeg_skeleton(w: int, h: int) -> bytes:
     for probe testing, like `encode_mp4_skeleton`."""
     import struct
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes((0xFF, marker)) + struct.pack(">H", 2 + len(payload)) + payload
-
+    seg = _jpeg_segment
     out = bytearray(b"\xff\xd8")  # SOI
     out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")  # APP0
     out += seg(0xDB, bytes([0]) + bytes([16] * 64))  # DQT table 0
@@ -2479,13 +2431,7 @@ def probe_jpeg(data: bytes) -> tuple[int, int, int, int, int, int, int]:
             ndht += 1
         pos += ln
         if marker == 0xDA:  # entropy-coded scan follows
-            start = pos
-            while pos + 1 < len(data) and not (
-                data[pos] == 0xFF
-                and data[pos + 1] != 0x00
-                and not 0xD0 <= data[pos + 1] <= 0xD7
-            ):
-                pos += 1
+            start, pos = pos, _entropy_end(data, pos)
             scan_bytes += pos - start
     if not saw_eoi:
         raise ValueError("no EOI marker")
@@ -2512,8 +2458,8 @@ PROBED_JPEG_SCHEMA = StructType(
 # boxes (moov/trak/mdia/minf/stbl) nest children. Walking the tree and
 # reading mvhd gives brand, track count, timescale and duration with no
 # codec work at all — the standard "probe" pass a media pipeline runs
-# over every blob before deciding what to decode. Sample DECODE still
-# requires a codec library and stays stubbed (`frame_sample_stub`).
+# over every blob before deciding what to decode. Decoding its samples
+# (H.264 etc.) requires a codec library.
 
 _MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 
@@ -2855,9 +2801,7 @@ def _resize_batches(
 # PNG (gray8 and truecolor RGB8) is fully decodable with the stdlib:
 # chunk walk with CRC verification, one zlib inflate, then per-scanline
 # unfiltering (the five standard filters: None/Sub/Up/Average/Paeth,
-# with the bpp-back left neighbor for multi-byte pixels). This replaces
-# the image stub for PNG blobs; baseline JPEG has its own real codecs
-# further down.
+# with the bpp-back left neighbor for multi-byte pixels).
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -3475,14 +3419,26 @@ def fake_image_codec(data: bytes) -> tuple[int, int, int]:
     return (1 + data[0] % 64, 1 + data[-1] % 64, 3)
 
 
-# --- Baseline JPEG gray8 codec (pure numpy/stdlib) --------------------------
-# The last image format that was stub-only: baseline sequential JPEG for
-# single-component (grayscale) images, implemented from the public spec
-# (ITU T.81) — 2-D DCT as an 8x8 matrix product, Annex K quantization
-# and Huffman tables, canonical bit-level entropy coding with 0xFF00
-# stuffing. Lossy by design: the round-trip contract is dims exact +
-# bounded reconstruction error (quantization-table-bounded), which the
-# oracle-gated query enforces. Headers interoperate with `probe_jpeg`.
+# --- JPEG codec (ITU T.81; pure numpy/stdlib) -------------------------------
+# Baseline sequential (SOF0) and progressive (SOF2) JPEG for 1-component
+# (gray) and 3-component (YCbCr) frames, built from the public spec: 2-D
+# DCT as an 8x8 matrix product, Annex K quantization and Huffman tables,
+# canonical bit-level entropy coding with 0xFF00 stuffing, DRI/RSTn
+# restarts, and the Annex G progressive scans (spectral selection,
+# successive approximation, EOBn runs).
+#
+# One core serves every public codec:
+#   - decode: `_jpeg_frame` walks the markers into a frame; one
+#     coefficient decoder per frame type (`_decode_sequential`,
+#     `_decode_progressive`) fills each component's block grid in
+#     `_scan_order`; `_jpeg_pixels` dequantizes, inverse-DCTs, upsamples
+#     and converts YCbCr to RGB.
+#   - encode: `_jpeg_encode` quantizes the component planes, writes the
+#     shared header and then one scan per entry of a scan script. A
+#     progressive stream carries the sequential stream's coefficients,
+#     so both decode to bitwise-identical pixels.
+# Lossy by design: a round trip keeps the dims exactly and bounds the
+# reconstruction error by the quantization tables.
 
 _JPEG_QTABLE = [
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -3522,37 +3478,86 @@ _AC_VALUES = [
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
+_JPEG_QTABLE_CHROMA = [
+    17, 18, 24, 47, 99, 99, 99, 99,
+    18, 21, 26, 66, 99, 99, 99, 99,
+    24, 26, 56, 99, 99, 99, 99, 99,
+    47, 66, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+]
 
-#: r18: every encoder/decoder call rebuilt its Huffman code tables,
-#: decode LUTs and the DCT basis from the same module constants (or, for
-#: MJPEG/AVI, from identical per-frame DHT bytes) — ~10% of the JPEG
-#: family's per-doc CPU in cProfile. The builders are pure functions of
-#: their byte inputs, so the memo returns the identical object with the
-#: identical contents; emitted bits cannot change.
+_DC_BITS_CHROMA = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
+_DC_VALUES_CHROMA = list(range(12))
+_AC_BITS_CHROMA = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
+_AC_VALUES_CHROMA = [
+    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
+    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
+    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
+    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
+    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
+    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
+    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
+    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
+    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
+    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
+    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
+    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
+    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
+    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
+]
+
+#: AC Huffman table for the progressive scans: the sequential Annex K
+#: table has no codes for the EOBn symbols (0x10..0xE0), so progressive
+#: encoders ship their own. This one covers the ENTIRE symbol alphabet
+#: canonically — 128 symbols at 8 bits + 128 at 9 bits (Kraft sum 0.75,
+#: valid DHT) — trading compression for a table that can express every
+#: run/size, ZRL and EOBn combination.
+_AC_BITS_PROG = [0, 0, 0, 0, 0, 0, 0, 128, 128, 0, 0, 0, 0, 0, 0, 0]
+_AC_VALUES_PROG = list(range(256))
+
+#: chroma subsampling modes -> (horizontal, vertical) luma sampling factors
+_JPEG_SUBSAMPLE = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
+
+
+#: Huffman tables are pure functions of their DHT bytes, and every encode
+#: and decode (and every MJPEG/AVI frame) asks for the same few, so they
+#: are memoized. Entries are immutable (tuples and mapping proxies), so a
+#: caller cannot corrupt a table another caller shares; a full cache
+#: evicts its oldest entry.
 _HUFF_CODES_CACHE: dict = {}
 _HUFF_LUT_CACHE: dict = {}
 
 
-def _huff_codes(bits: list[int], values: list[int]) -> dict[int, tuple[int, int]]:
-    """Canonical Huffman: symbol -> (code_length, code). Memoized on the
-    (bits, values) spec — callers treat the table as read-only."""
-    key = (bytes(bits), bytes(values))
-    cached = _HUFF_CODES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[values[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    if len(_HUFF_CODES_CACHE) >= 64:
-        _HUFF_CODES_CACHE.clear()
-    _HUFF_CODES_CACHE[key] = out
-    return out
+def _memo(cache: dict, key, build: Callable):
+    hit = cache.get(key)
+    if hit is None:
+        if len(cache) >= 64:
+            del cache[next(iter(cache))]
+        hit = cache[key] = build()
+    return hit
+
+
+def _huff_codes(bits, values) -> tuple:
+    """Canonical Huffman codes assigned in HUFFVAL order (T.81 C.2):
+    a 256-slot tuple, symbol -> (code_length, code), None where the
+    table has no code for the symbol."""
+
+    def build():
+        out: list = [None] * 256
+        code = 0
+        k = 0
+        for length in range(1, 17):
+            for _ in range(bits[length - 1]):
+                out[values[k]] = (length, code)
+                code += 1
+                k += 1
+            code <<= 1
+        return tuple(out)
+
+    return _memo(_HUFF_CODES_CACHE, (bytes(bits), bytes(values)), build)
 
 
 class _HuffLUT:
@@ -3562,34 +3567,34 @@ class _HuffLUT:
     (length, code) bit-walk, which also owns the malformed-stream
     errors. Valid because no Huffman code is a prefix of another.
 
-    r18: LUT entries are packed ints `(sym << 4) | length` with -1 for
-    "no short code" (lengths here are <= 8, symbols <= 255) — the old
-    (sym, length) tuples cost an allocation-free but measurable unpack
-    per symbol in `_read_symbol`, the decode profile's hottest frame."""
+    LUT entries are packed ints `(sym << 4) | length`, -1 for "no short
+    code" (lengths here are <= 8, symbols <= 255), which spares
+    `_read_symbol` a tuple unpack per symbol."""
 
     __slots__ = ("table", "lut")
 
     def __init__(self, table: dict[tuple[int, int], int]):
-        self.table = table
-        self.lut: list = [-1] * 256
+        from types import MappingProxyType
+
+        self.table = MappingProxyType(table)
+        lut = [-1] * 256
         for (ln, code), sym in table.items():
             if ln <= 8:
                 base = code << (8 - ln)
                 entry = (sym << 4) | ln
                 for lo in range(1 << (8 - ln)):
-                    self.lut[base | lo] = entry
+                    lut[base | lo] = entry
+        self.lut = tuple(lut)
 
 
-def _huff_decode_table(bits: list[int], values: list[int]) -> _HuffLUT:
-    key = (bytes(bits), bytes(values))
-    cached = _HUFF_LUT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    lut = _HuffLUT({lc: sym for sym, lc in _huff_codes(bits, values).items()})
-    if len(_HUFF_LUT_CACHE) >= 64:
-        _HUFF_LUT_CACHE.clear()
-    _HUFF_LUT_CACHE[key] = lut
-    return lut
+def _huff_decode_table(bits, values) -> _HuffLUT:
+    return _memo(
+        _HUFF_LUT_CACHE,
+        (bytes(bits), bytes(values)),
+        lambda: _HuffLUT(
+            {lc: sym for sym, lc in enumerate(_huff_codes(bits, values)) if lc}
+        ),
+    )
 
 
 _DCT_MATRIX_CACHE = None
@@ -3647,10 +3652,6 @@ class _BitWriter:
         return bytes(self.out)
 
 
-def _category(v: int) -> int:
-    return 0 if v == 0 else v.bit_length() if v > 0 else (-v).bit_length()
-
-
 def _dct_quant_plane(plane, q, d):
     """Vectorized forward-DCT + quantize + zigzag for EVERY 8x8 block of
     a plane (dims multiples of 8) in one einsum — the per-block Python
@@ -3673,7 +3674,8 @@ def _dct_quant_plane(plane, q, d):
 def _idct_blocks(zzarr, q, d):
     """Vectorized dequantize + inverse-DCT for a stack of zigzag
     coefficient blocks: (n, 64) int -> (n, 8, 8) float in 0..255
-    space."""
+    space. `q` is one (8, 8) quant table or one per block (n, 8, 8);
+    each block's result depends only on that block and its table."""
     import numpy as np
 
     n = len(zzarr)
@@ -3782,58 +3784,6 @@ def _entropy_decode_block(r, dct, act, prev_dc: int):
         zz[k] = _extend(r.bits(size), size)
         k += 1
     return zz, prev_dc
-
-
-def encode_jpeg_gray8(
-    width: int, height: int, pixels: bytes, restart_interval: int = 0
-) -> bytes:
-    """Baseline sequential JPEG, one grayscale component, no
-    subsampling, Annex K tables. Deterministic: same pixels -> same
-    bytes. `restart_interval` > 0 emits a DRI segment and RSTn markers
-    every N MCUs (byte-aligned, DC predictor reset) — the error-
-    resilience feature most camera JPEGs carry."""
-    import struct as _s
-
-    import numpy as np
-
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer does not match dims")
-    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
-    ph = (height + 7) // 8 * 8
-    pw = (width + 7) // 8 * 8
-    padded = np.pad(img, ((0, ph - height), (0, pw - width)), mode="edge").astype(
-        np.float64
-    )
-    d = _dct_matrix()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALUES)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALUES)
-    zzp = _dct_quant_plane(padded, q, d)
-    w = _BitWriter()
-    prev_dc = 0
-    mcu = 0
-    for by in range(ph // 8):
-        for bx in range(pw // 8):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.raw(bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8]))
-                prev_dc = 0
-            mcu += 1
-            prev_dc = _entropy_encode_block(w, zzp[by, bx], dc_codes, ac_codes, prev_dc)
-    entropy = w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(0xFFDB, bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64)))
-    sof = seg(0xFFC0, _s.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALUES),
-    )
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    dri = seg(0xFFDD, _s.pack(">H", restart_interval)) if restart_interval else b""
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + entropy + b"\xff\xd9"
 
 
 class _BitReader:
@@ -3957,132 +3907,6 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-@_malformed_raises_value_error
-def decode_jpeg_gray8(data: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline single-component JPEG back to (width, height,
-    gray8 pixels). Accepts exactly the streams `encode_jpeg_gray8`
-    produces plus any spec-conforming baseline gray JPEG without
-    restart markers. Raises ValueError on anything malformed."""
-    import struct as _s
-
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    dc_id = ac_id = 0
-    entropy_start = None
-    restart_interval = 0
-    while i < len(data):
-        if i + 2 > len(data):
-            raise ValueError("truncated JPEG (marker cut off)")
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if m == 0xD9:
-            break
-        if i + 4 > len(data):
-            raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
-            raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
-        if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
-                tab = [0] * 64
-                for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC0:
-            height, width = _s.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            if ncomp != 1:
-                raise ValueError("only single-component (gray) JPEG supported")
-            qtab_id = body[8]
-        elif m in (0xC1, 0xC2, 0xC3):
-            raise ValueError("only baseline sequential (SOF0) supported")
-        elif m == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                values = list(body[j + 17 : j + 17 + n])
-                huff[(tc, th)] = _huff_decode_table(bits, values)
-                j += 17 + n
-        elif m == 0xDA:
-            dc_id, ac_id = body[2] >> 4, body[2] & 0x0F
-            entropy_start = i + 2 + length
-            break
-        elif m == 0xDD:
-            restart_interval = _s.unpack_from(">H", body, 0)[0]
-        i += 2 + length
-    if width is None or entropy_start is None:
-        raise ValueError("missing SOF/SOS")
-    end = data.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("missing EOI")
-    r = _BitReader(data[entropy_start:end])
-    dct = huff[(0, dc_id)]
-    act = huff[(1, ac_id)]
-    d = _dct_matrix()
-    q = np.array(qtab[qtab_id], dtype=np.float64).reshape(8, 8)
-    ph = (height + 7) // 8 * 8
-    pw = (width + 7) // 8 * 8
-    prev_dc = 0
-    mcu = 0
-    zzs = []
-    for _ in range((ph // 8) * (pw // 8)):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            r.expect_restart()
-            prev_dc = 0
-        mcu += 1
-        zz, prev_dc = _entropy_decode_block(r, dct, act, prev_dc)
-        zzs.append(zz)
-    blocks = _idct_blocks(zzs, q, d)  # (n, 8, 8), row-major block order
-    out = (
-        blocks.reshape(ph // 8, pw // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(ph, pw)
-    )
-    pixels = np.clip(np.rint(out[:height, :width]), 0, 255).astype(np.uint8)
-    return width, height, pixels.tobytes()
-
-
-# --- PROGRESSIVE (SOF2) gray JPEG codec -------------------------------------
-# Spectral selection + successive approximation + EOBRUN (ITU T.81
-# Annex G), pure stdlib/numpy on top of the baseline entropy layer.
-# The quantized coefficients of a progressive stream are IDENTICAL to
-# the sequential encoding of the same image — progressive only changes
-# the transmission order — so the decoder is verified by bitwise
-# equality against the baseline decoder's pixels (no tolerance).
-
-
-#: AC Huffman table for the progressive scans: the sequential Annex K
-#: table has no codes for the EOBn symbols (0x10..0xE0), so progressive
-#: encoders ship their own. This one covers the ENTIRE symbol alphabet
-#: canonically — 128 symbols at 8 bits + 128 at 9 bits (Kraft sum 0.75,
-#: valid DHT) — trading compression for a table that can express every
-#: run/size, ZRL and EOBn combination.
-_AC_BITS_PROG = [0, 0, 0, 0, 0, 0, 0, 128, 128, 0, 0, 0, 0, 0, 0, 0]
-_AC_VALUES_PROG = list(range(256))
-
-
-def _pt_ac(v: int, al: int) -> int:
-    """AC point transform: divide by 2^Al rounding toward zero
-    (T.81 G.1.2.2; DC uses the arithmetic shift instead)."""
-    return v >> al if v >= 0 else -((-v) >> al)
-
-
 def _put_pend(w, pend: list[int]) -> None:
     """Emit buffered correction bits as ONE put (first bit most
     significant — identical to the bit-at-a-time sequence)."""
@@ -4110,12 +3934,9 @@ def _flush_eobrun(w, ac_codes, eobrun: int, pend: list[int]) -> int:
 def _encode_ac_first(w, blocks, ss: int, se: int, al: int, ac_codes) -> None:
     """AC first scan for band [ss..se] at point transform al (G.1.2.2):
     sequential-style run/size coding of the point-transformed
-    coefficients, with EOB generalized to EOBn runs across blocks.
-
-    r18: the whole scan's point transform runs as ONE vectorized int64
-    pass (the per-coefficient `_pt_ac(int(blk[k]))` listcomp over numpy
-    scalars was a top-4 profile frame); `v >> al` on int64 is the same
-    arithmetic shift, so the transformed values are exactly `_pt_ac`'s."""
+    coefficients, with EOB generalized to EOBn runs across blocks. The
+    point transform divides by 2^Al rounding toward zero, as one
+    vectorized int64 pass over the whole scan."""
     import numpy as np
 
     band = np.asarray(blocks)[:, ss : se + 1]
@@ -4209,80 +4030,6 @@ def _encode_ac_refine(w, blocks, ss: int, se: int, al: int, ac_codes) -> None:
     _flush_eobrun(w, ac_codes, eobrun, pend)
 
 
-def encode_jpeg_gray8_progressive(width: int, height: int, pixels: bytes) -> bytes:
-    """REAL progressive (SOF2) gray JPEG encoder: the same DCT +
-    quantization as the baseline encoder, transmitted as six scans
-    exercising the full progressive feature set — DC first (Al=1), AC
-    first for bands 1-5 and 6-63 (Al=1, EOBn runs), DC refinement, and
-    AC refinement for both bands (correction bits). Decodes to pixels
-    BITWISE-IDENTICAL to the baseline encoding of the same image
-    (property-tested), because the coefficients are the same — only
-    the transmission order differs."""
-    import struct as _s
-
-    import numpy as np
-
-    if len(pixels) != width * height:
-        raise ValueError(f"expected {width * height} pixel bytes")
-    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
-    ph, pw = (height + 7) // 8 * 8, (width + 7) // 8 * 8
-    padded = np.pad(img, ((0, ph - height), (0, pw - width)), mode="edge").astype(
-        np.float64
-    )
-    d = _dct_matrix()
-    q = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    blocks = _dct_quant_plane(padded, q, d).reshape(-1, 64)
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALUES)
-    ac_codes = _huff_codes(_AC_BITS_PROG, _AC_VALUES_PROG)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return seg(0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xFFDB, bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64)))
-    out += seg(0xFFC2, _s.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    out += seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x10]) + bytes(_AC_BITS_PROG) + bytes(_AC_VALUES_PROG),
-    )
-
-    # scan 1: DC first, Al=1 (arithmetic shift per G.1.2.1; int64 >> is
-    # the same arithmetic shift, vectorized for the whole scan)
-    w = _BitWriter()
-    prev = 0
-    for v in (blocks[:, 0] >> 1).tolist():
-        diff = v - prev
-        prev = v
-        s = _category(diff)
-        ln, code = dc_codes[s]
-        w.put(code, ln)
-        if s:
-            w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-    out += sos(0, 0, 0, 1) + w.flush()
-    # scans 2-3: AC first per band, Al=1
-    for ss, se in ((1, 5), (6, 63)):
-        w = _BitWriter()
-        _encode_ac_first(w, blocks, ss, se, 1, ac_codes)
-        out += sos(ss, se, 0, 1) + w.flush()
-    # scan 4: DC refinement — one raw bit per block (two's-complement
-    # & 1 matches int64's, so the emitted bit is unchanged)
-    w = _BitWriter()
-    for b in (blocks[:, 0] & 1).tolist():
-        w.put(b, 1)
-    out += sos(0, 0, 1, 0) + w.flush()
-    # scans 5-6: AC refinement per band
-    for ss, se in ((1, 5), (6, 63)):
-        w = _BitWriter()
-        _encode_ac_refine(w, blocks, ss, se, 0, ac_codes)
-        out += sos(ss, se, 1, 0) + w.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
 def _decode_ac_first_scan(r, blocks, ss, se, al, act) -> None:
     eobrun = 0
     for blk in blocks:
@@ -4370,27 +4117,52 @@ def _decode_ac_refine_scan(r, blocks, ss, se, al, act) -> None:
             eobrun -= 1
 
 
-@_malformed_raises_value_error
-def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive (SOF2) gray JPEG decoder: multi-scan entropy
-    decode with spectral selection, successive approximation (DC and AC
-    first + refinement) and EOBn runs, accumulating the coefficient
-    array across scans, then one vectorized dequantize+IDCT. Restart
-    markers inside progressive scans are not supported (our encoder
-    never emits them); everything malformed raises ValueError."""
-    import struct as _s
+class _JpegFrame:
+    """A JPEG stream as `_jpeg_frame` parsed it."""
 
-    import numpy as np
+    __slots__ = ("sof", "width", "height", "comps", "sampling", "qt", "restart", "scans")
+
+    def __init__(self):
+        self.sof = None  # 0xC0 sequential or 0xC2 progressive
+        self.width = self.height = 0
+        self.comps: list = []  # (component id, h, v, quant table id)
+        self.sampling: list = []  # (h, v) per component
+        self.qt: dict = {}  # quant table id -> 64 natural-order ints
+        self.restart = 0
+        # per SOS: (header body, Huffman LUTs defined by then, entropy
+        # start, entropy end)
+        self.scans: list = []
+
+
+def _entropy_end(data: bytes, pos: int) -> int:
+    """Offset of the marker that ends the entropy-coded data starting at
+    `pos`: the first 0xFF followed by neither stuffing (0x00) nor RSTn,
+    or the last byte's offset when no such marker follows."""
+    n = len(data)
+    while True:
+        j = data.find(b"\xff", pos, n - 1)
+        if j < 0:
+            return max(pos, n - 1)
+        nxt = data[j + 1]
+        if nxt and not 0xD0 <= nxt <= 0xD7:
+            return j
+        pos = j + 1
+
+
+def _jpeg_frame(data: bytes) -> _JpegFrame:
+    """Walk a JPEG's markers from SOI to EOI. Every marker but EOI opens
+    a length-prefixed segment; DQT, DHT, DRI and SOF0/SOF2 are parsed,
+    the rest skipped. A sequential frame stops at its first SOS, whose
+    entropy data runs to the last EOI in the stream; a progressive frame
+    walks every scan, each ending at `_entropy_end`. Scan headers are
+    kept raw: their meaning belongs to the scan decoders."""
+    import struct as _s
 
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
+    frame = _JpegFrame()
+    huff: dict = {}
     i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    qtab_id = 0
-    blocks = None
-    dc_done = False
     while i < len(data):
         if i + 2 > len(data):
             raise ValueError("truncated JPEG (marker cut off)")
@@ -4401,200 +4173,329 @@ def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
             break
         if i + 4 > len(data):
             raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
+        end = i + 2 + _s.unpack_from(">H", data, i + 2)[0]
+        if end > len(data):
             raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
+        body = data[i + 4 : end]
+        i = end
         if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
+            for j in range(0, len(body), 65):
+                if body[j] >> 4:
                     raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
                 tab = [0] * 64
                 for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC2:
-            height, width = _s.unpack_from(">HH", body, 1)
-            if body[5] != 1:
-                raise ValueError("only single-component progressive supported")
-            qtab_id = body[8]
-            nb = ((height + 7) // 8) * ((width + 7) // 8)
-            blocks = [[0] * 64 for _ in range(nb)]
-        elif m in (0xC0, 0xC1, 0xC3):
-            raise ValueError("not a progressive (SOF2) stream")
+                    tab[_ZIGZAG[k]] = body[j + 1 + k]
+                frame.qt[body[j] & 0x0F] = tab
         elif m == 0xC4:
             j = 0
             while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                values = list(body[j + 17 : j + 17 + n])
-                huff[(tc, th)] = _huff_decode_table(bits, values)
+                n = sum(body[j + 1 : j + 17])
+                huff[(body[j] >> 4, body[j] & 0x0F)] = _huff_decode_table(
+                    body[j + 1 : j + 17], body[j + 17 : j + 17 + n]
+                )
                 j += 17 + n
         elif m == 0xDD:
-            if _s.unpack_from(">H", body, 0)[0]:
-                raise ValueError("restart markers unsupported in progressive")
+            frame.restart = _s.unpack_from(">H", body, 0)[0]
+        elif 0xC0 <= m <= 0xC3:
+            if m not in (0xC0, 0xC2) or frame.sof not in (None, m):
+                raise ValueError(
+                    "only baseline sequential (SOF0) and progressive (SOF2) "
+                    "frames supported"
+                )
+            frame.sof = m
+            frame.height, frame.width = _s.unpack_from(">HH", body, 1)
+            comps = [
+                (body[6 + 3 * c], body[7 + 3 * c] >> 4, body[7 + 3 * c] & 0x0F, body[8 + 3 * c])
+                for c in range(body[5])
+            ]
+            if len(comps) == 1:
+                # a lone component's blocks tile the image whatever
+                # sampling factors it declares (T.81 A.2.2)
+                comps = [(comps[0][0], 1, 1, comps[0][3])]
+            elif len({c[0] for c in comps}) < len(comps):
+                raise ValueError("duplicate component ids in SOF")
+            elif any(not (1 <= h <= 2 and 1 <= v <= 2) for _c, h, v, _q in comps):
+                raise ValueError("sampling factors beyond 2x2 unsupported")
+            frame.comps = comps
+            frame.sampling = [(h, v) for _c, h, v, _q in comps]
         elif m == 0xDA:
-            if blocks is None:
-                raise ValueError("SOS before SOF2")
-            if body[0] != 1:
-                raise ValueError("only single-component scans supported")
-            dc_id, ac_id = body[2] >> 4, body[2] & 0x0F
-            ss, se, ahl = body[3], body[4], body[5]
-            ah, al = ahl >> 4, ahl & 0x0F
-            if se > 63 or ss > se:
-                raise ValueError("bad spectral band")
-            # entropy data: up to the next real marker (stuffed 0x00 and
-            # RSTn bytes belong to the scan)
-            j = i + 2 + length
-            while j + 1 < len(data) and not (
-                data[j] == 0xFF
-                and data[j + 1] != 0x00
-                and not 0xD0 <= data[j + 1] <= 0xD7
-            ):
-                j += 1
-            r = _BitReader(data[i + 2 + length : j])
-            if ss == 0:
-                if se != 0:
-                    raise ValueError("DC scan must have Se=0")
-                if ah == 0:
-                    prev = 0
-                    dct = huff.get((0, dc_id))
-                    if dct is None:
-                        raise ValueError("missing DC Huffman table")
-                    for blk in blocks:
-                        s = _read_symbol(r, dct)
-                        prev += _extend(r.bits(s), s) if s else 0
-                        blk[0] = prev << al
-                    dc_done = True
-                else:
-                    # DC refinement reads exactly one raw bit per block
-                    # regardless of content — batch the reads in chunks
-                    # (same bits, same MSB-first order)
-                    p1 = 1 << al
-                    nb_total = len(blocks)
-                    i0 = 0
-                    while i0 < nb_total:
-                        cnt = min(32, nb_total - i0)
-                        v = r.bits(cnt)
-                        m = 1 << (cnt - 1)
-                        for blk in blocks[i0 : i0 + cnt]:
-                            if v & m:
-                                blk[0] |= p1
-                            m >>= 1
-                        i0 += cnt
-            else:
-                if not dc_done:
-                    raise ValueError("AC scan before first DC scan")
-                act = huff.get((1, ac_id))
-                if act is None:
-                    raise ValueError("missing AC Huffman table")
-                if ah == 0:
-                    _decode_ac_first_scan(r, blocks, ss, se, al, act)
-                else:
-                    if al != ah - 1:
-                        raise ValueError("refinement must lower Al by 1")
-                    _decode_ac_refine_scan(r, blocks, ss, se, al, act)
+            if frame.sof != 0xC2:
+                eoi = data.rfind(b"\xff\xd9")
+                if eoi < 0:
+                    raise ValueError("missing EOI")
+                frame.scans.append((body, huff, i, eoi))
+                break
+            j = _entropy_end(data, i)
+            frame.scans.append((body, dict(huff), i, j))
             i = j
+    return frame
+
+
+def _mcu_grid(width: int, height: int, sampling) -> tuple[int, int, int, int]:
+    """(hmax, vmax, MCU columns, MCU rows) for components sampled at
+    `sampling` [(h, v), ...]. Component c stores its blocks in a padded
+    grid of (rows * v_c, cols * h_c) blocks, raster order."""
+    hmax = max(h for h, _v in sampling)
+    vmax = max(v for _h, v in sampling)
+    return hmax, vmax, -(-width // (8 * hmax)), -(-height // (8 * vmax))
+
+
+def _scan_order(width: int, height: int, sampling, ci: int | None = None) -> list:
+    """The (component, block index in its padded grid) slots of one scan,
+    in transmission order. A scan of every component (ci=None)
+    interleaves them MCU by MCU in frame order; a scan of component ci
+    alone is non-interleaved (T.81 A.2.2) and walks that component's own
+    ceil(samples / 8) block grid. For a 1-component frame the two walks
+    are the same."""
+    hmax, vmax, cols, rows = _mcu_grid(width, height, sampling)
+    if ci is not None:
+        h, v = sampling[ci]
+        samples_y, samples_x = -(-height * v // vmax), -(-width * h // hmax)
+        return [
+            (ci, y * cols * h + x)
+            for y in range(-(-samples_y // 8))
+            for x in range(-(-samples_x // 8))
+        ]
+    return [
+        (c, (my * v + dy) * cols * h + mx * h + dx)
+        for my in range(rows)
+        for mx in range(cols)
+        for c, (h, v) in enumerate(sampling)
+        for dy in range(v)
+        for dx in range(h)
+    ]
+
+
+def _scan_selectors(comps: list, body: bytes) -> dict[int, int]:
+    """Component index -> table-selector byte (Td << 4 | Ta) for each
+    component spec of an SOS header. A 1-component frame has one
+    component to scan, so its scans take the first spec's tables
+    whatever component id they name."""
+    if len(comps) == 1:
+        return {0: body[2]}
+    index = {c[0]: k for k, c in enumerate(comps)}
+    return {index[body[1 + 2 * c]]: body[2 + 2 * c] for c in range(body[0])}
+
+
+def _decode_sequential(frame: _JpegFrame, data: bytes, sizes: list) -> list:
+    """The one scan of a sequential frame, every component interleaved,
+    with a restart marker (and DC predictor reset) every
+    `frame.restart` MCUs. Returns each component's grid of `sizes`
+    zigzag blocks."""
+    body, huff, start, end = frame.scans[0]
+    sel = _scan_selectors(frame.comps, body)
+    n = len(frame.comps)
+    dct = [huff[(0, sel[c] >> 4)] for c in range(n)]
+    act = [huff[(1, sel[c] & 0x0F)] for c in range(n)]
+    interval = frame.restart * sum(h * v for h, v in frame.sampling)
+    r = _BitReader(data[start:end])
+    coefs: list = [[None] * size for size in sizes]
+    prev = [0] * n
+    for k, (c, b) in enumerate(_scan_order(frame.width, frame.height, frame.sampling)):
+        if interval and k and k % interval == 0:
+            r.expect_restart()
+            prev = [0] * n
+        coefs[c][b], prev[c] = _entropy_decode_block(r, dct[c], act[c], prev[c])
+    return coefs
+
+
+def _decode_progressive(frame: _JpegFrame, data: bytes, sizes: list) -> list:
+    """Every scan of a progressive frame, accumulating coefficients into
+    each component's grid of `sizes` zigzag blocks: DC scans (first or
+    refinement) cover all components interleaved; AC scans cover one
+    component's band (first or refinement, EOBn runs)."""
+    if frame.restart:
+        raise ValueError("restart markers unsupported in progressive")
+    n = len(frame.comps)
+    coefs = [[[0] * 64 for _ in range(size)] for size in sizes]
+    dc_done = False
+    for body, huff, start, end in frame.scans:
+        ns = body[0]
+        ss, se, ahl = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
+        ah, al = ahl >> 4, ahl & 0x0F
+        r = _BitReader(data[start:end])
+        if ss == 0:
+            if se != 0 or ns != n:
+                raise ValueError("DC scans must cover every component with Se=0")
+            order = _scan_order(frame.width, frame.height, frame.sampling)
+            if ah == 0:
+                sel = _scan_selectors(frame.comps, body)
+                dct = [huff[(0, sel[c] >> 4)] for c in range(n)]
+                prev = [0] * n
+                for c, b in order:
+                    s = _read_symbol(r, dct[c])
+                    prev[c] += _extend(r.bits(s), s) if s else 0
+                    coefs[c][b][0] = prev[c] << al
+                dc_done = True
+            else:
+                # one raw bit per block regardless of content: read them
+                # in chunks (same bits, same MSB-first order)
+                p1 = 1 << al
+                for i0 in range(0, len(order), 32):
+                    chunk = order[i0 : i0 + 32]
+                    v = r.bits(len(chunk))
+                    bit = 1 << (len(chunk) - 1)
+                    for c, b in chunk:
+                        if v & bit:
+                            coefs[c][b][0] |= p1
+                        bit >>= 1
             continue
-        i += 2 + length
-    if width is None or blocks is None or not dc_done:
-        raise ValueError("missing SOF2/DC scan")
-    d = _dct_matrix()
-    q = np.array(qtab[qtab_id], dtype=np.float64).reshape(8, 8)
-    ph, pw = (height + 7) // 8 * 8, (width + 7) // 8 * 8
-    out = (
-        _idct_blocks(blocks, q, d)
-        .reshape(ph // 8, pw // 8, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(ph, pw)
+        if ns != 1:
+            raise ValueError("progressive AC scans must be single-component")
+        if not dc_done:
+            raise ValueError("AC scan before first DC scan")
+        if se > 63 or ss > se:
+            raise ValueError("bad spectral band")
+        ((ci, sel),) = _scan_selectors(frame.comps, body).items()
+        act = huff[(1, sel & 0x0F)]
+        order = _scan_order(frame.width, frame.height, frame.sampling, ci)
+        blocks = [coefs[ci][b] for _c, b in order]
+        if ah == 0:
+            _decode_ac_first_scan(r, blocks, ss, se, al, act)
+        elif al != ah - 1:
+            raise ValueError("refinement must lower Al by 1")
+        else:
+            _decode_ac_refine_scan(r, blocks, ss, se, al, act)
+    if not dc_done:
+        raise ValueError("missing DC scan")
+    return coefs
+
+
+def _jpeg_pixels(frame: _JpegFrame, coefs: list) -> bytes:
+    """One batched dequantize + IDCT over every block, each component's
+    grid reshaped into its plane, upsampled by sample replication and
+    cropped; 3-component frames then convert JFIF YCbCr to RGB. Returns
+    row-major gray8 or interleaved RGB bytes."""
+    import numpy as np
+
+    hmax, vmax, cols, rows = _mcu_grid(frame.width, frame.height, frame.sampling)
+    q = np.array([frame.qt[tq] for _c, _h, _v, tq in frame.comps], dtype=np.float64)
+    counts = [len(blocks) for blocks in coefs]
+    pix = _idct_blocks(
+        [zz for blocks in coefs for zz in blocks],
+        np.repeat(q.reshape(-1, 8, 8), counts, axis=0),
+        _dct_matrix(),
     )
-    pixels = np.clip(np.rint(out[:height, :width]), 0, 255).astype(np.uint8)
-    return width, height, pixels.tobytes()
+    planes = []
+    k = 0
+    for (h, v), count in zip(frame.sampling, counts):
+        plane = (
+            pix[k : k + count]
+            .reshape(rows * v, cols * h, 8, 8)
+            .transpose(0, 2, 1, 3)
+            .reshape(rows * v * 8, cols * h * 8)
+        )
+        k += count
+        if (h, v) != (hmax, vmax):
+            plane = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1)
+        planes.append(plane[: frame.height, : frame.width])
+    if len(planes) == 3:
+        y, cb, cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
+        out = np.stack(
+            [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb], axis=-1
+        )
+    else:
+        out = planes[0]
+    return np.clip(np.rint(out), 0, 255).astype(np.uint8).tobytes()
 
 
 @_malformed_raises_value_error
+def _jpeg_decode(data: bytes, n_comps: int, sof: int | None) -> tuple[int, int, bytes]:
+    """Decode an `n_comps`-component JPEG to (width, height, pixels).
+    `sof` pins the frame type (0xC0 or 0xC2); None takes either."""
+    frame = _jpeg_frame(data)
+    if frame.sof is None or not frame.scans:
+        raise ValueError("missing SOF/SOS")
+    if sof == 0xC0 and frame.sof != sof:
+        raise ValueError("only baseline sequential (SOF0) supported")
+    if sof == 0xC2 and frame.sof != sof:
+        raise ValueError("not a progressive (SOF2) stream")
+    if len(frame.comps) != n_comps:
+        kind = "single-component (gray)" if n_comps == 1 else "3-component (YCbCr)"
+        raise ValueError(f"expected a {kind} frame, got {len(frame.comps)} components")
+    if not (frame.width and frame.height):
+        raise ValueError("frame has no pixels")
+    _h, _v, cols, rows = _mcu_grid(frame.width, frame.height, frame.sampling)
+    sizes = [rows * v * cols * h for h, v in frame.sampling]
+    decode = _decode_progressive if frame.sof == 0xC2 else _decode_sequential
+    return frame.width, frame.height, _jpeg_pixels(frame, decode(frame, data, sizes))
+
+
+def decode_jpeg_gray8(data: bytes) -> tuple[int, int, bytes]:
+    """Decode a baseline (SOF0) single-component JPEG, restart markers
+    included, to (width, height, gray8 pixels). Raises ValueError on
+    anything malformed and on other frame types."""
+    return _jpeg_decode(data, 1, 0xC0)
+
+
+def decode_jpeg_gray8_progressive(data: bytes) -> tuple[int, int, bytes]:
+    """Decode a progressive (SOF2) single-component JPEG (spectral
+    selection, successive approximation, EOBn runs) to (width, height,
+    gray8 pixels). Restart markers in progressive scans are unsupported;
+    anything malformed raises ValueError."""
+    return _jpeg_decode(data, 1, 0xC2)
+
+
 def decode_jpeg_gray8_any(data: bytes) -> tuple[int, int, bytes]:
-    """Gray JPEG decode dispatching on the frame type: SOF0 baseline
-    streams take the sequential decoder, SOF2 takes the progressive
-    one — the single entry point a curation pass uses when the corpus
-    mixes both. The frame type comes from a real marker walk (a naive
-    byte search would trip on 0xFFC2 inside table segment bodies)."""
+    """Gray JPEG decode of either frame type (SOF0 or SOF2), for corpora
+    that mix both."""
+    return _jpeg_decode(data, 1, None)
+
+
+def decode_jpeg_color(data: bytes) -> tuple[int, int, bytes]:
+    """Decode a baseline (SOF0) 3-component YCbCr JPEG to (width, height,
+    interleaved RGB bytes). Sampling factors up to 2x2 (4:2:0, 4:2:2,
+    4:4:4), several DQT/DHT tables and DRI/RSTn restarts are supported;
+    anything malformed raises ValueError."""
+    return _jpeg_decode(data, 3, 0xC0)
+
+
+def decode_jpeg_color_progressive(data: bytes) -> tuple[int, int, bytes]:
+    """Decode a progressive (SOF2) 3-component YCbCr JPEG (interleaved DC
+    scans, per-component AC scans) to (width, height, interleaved RGB
+    bytes). Restart markers in progressive scans are unsupported;
+    anything malformed raises ValueError."""
+    return _jpeg_decode(data, 3, 0xC2)
+
+
+def decode_jpeg_color_any(data: bytes) -> tuple[int, int, bytes]:
+    """Color JPEG decode of either frame type (SOF0 or SOF2)."""
+    return _jpeg_decode(data, 3, None)
+
+
+def _jpeg_segment(marker: int, payload: bytes) -> bytes:
     import struct as _s
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):  # a SOF marker
-            return (
-                decode_jpeg_gray8_progressive(data)
-                if m == 0xC2
-                else decode_jpeg_gray8(data)
-            )
-        if m == 0xD9 or m == 0xDA:
-            break
-        i += 2 + _s.unpack_from(">H", data, i + 2)[0]
-    raise ValueError("no frame header before scan/EOI")
+    return _s.pack(">HH", 0xFF00 | marker, len(payload) + 2) + payload
 
 
-# --- Baseline COLOR JPEG codec (YCbCr 4:2:0, pure numpy/stdlib) -------------
-# Chroma extension of the gray8 codec above: JFIF RGB<->YCbCr color
-# transform, 2x2 chroma subsampling, interleaved 16x16 MCUs (4 luma +
-# Cb + Cr blocks), Annex K chroma quantization and Huffman tables.
-# Shares _encode_block/_decode_block with the gray path — the entropy
-# layer is identical, only the MCU structure and color planes differ.
+def _jpeg_header(
+    sof: int, width: int, height: int, comps, qtables, dht, restart_interval: int
+) -> bytes:
+    """SOI, then one segment each of DQT (tables numbered in order), SOF,
+    DHT (`dht` = (class << 4 | id, bits, values) in order) and, for a
+    restart interval, DRI."""
+    import struct as _s
 
-_JPEG_QTABLE_CHROMA = [
-    17, 18, 24, 47, 99, 99, 99, 99,
-    18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99,
-    47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99,
-]
-
-_DC_BITS_CHROMA = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-_DC_VALUES_CHROMA = list(range(12))
-_AC_BITS_CHROMA = [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77]
-_AC_VALUES_CHROMA = [
-    0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12, 0x41,
-    0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-    0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15, 0x62, 0x72, 0xD1,
-    0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-    0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44,
-    0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-    0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74,
-    0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-    0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A,
-    0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-    0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-    0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-    0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
+    dqt = b"".join(bytes([t]) + bytes(q[z] for z in _ZIGZAG) for t, q in enumerate(qtables))
+    frame = _s.pack(">BHHB", 8, height, width, len(comps)) + bytes(
+        x for cid, h, v, tq, _dc, _ac in comps for x in (cid, (h << 4) | v, tq)
+    )
+    tables = b"".join(bytes([tc]) + bytes(bits) + bytes(vals) for tc, bits, vals in dht)
+    dri = _jpeg_segment(0xDD, _s.pack(">H", restart_interval)) if restart_interval else b""
+    return (
+        b"\xff\xd8"
+        + _jpeg_segment(0xDB, dqt)
+        + _jpeg_segment(sof, frame)
+        + _jpeg_segment(0xC4, tables)
+        + dri
+    )
 
 
-#: chroma subsampling modes -> (horizontal, vertical) luma sampling factors
-_JPEG_SUBSAMPLE = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
-
-
-def _color_quant_blocks(width, height, rgb, subsample):
-    """Shared color-plane preparation for the sequential AND progressive
-    color encoders: JFIF RGB->YCbCr, MCU-aligned edge padding, chroma
-    mean-subsampling, vectorized DCT+quantize per plane. Returns
-    (hs, vs, ph, pw, zzY, zzCb, zzCr) with zigzag block grids — both
-    encoders transmitting the SAME coefficients is what makes the
-    progressive round trip bitwise-comparable to the sequential one."""
+def _ycbcr_planes(width: int, height: int, rgb: bytes, subsample) -> tuple[list, tuple]:
+    """JFIF RGB -> YCbCr planes (0..255 space) plus the luma sampling
+    (h, v) of a subsampling mode ("420", "422", "444"; True means "420"
+    and False "444")."""
     import numpy as np
 
     if subsample is True:
@@ -4603,48 +4504,153 @@ def _color_quant_blocks(width, height, rgb, subsample):
         subsample = "444"
     if subsample not in _JPEG_SUBSAMPLE:
         raise ValueError(f"subsample must be one of {sorted(_JPEG_SUBSAMPLE)}")
-    hs, vs = _JPEG_SUBSAMPLE[subsample]
     if len(rgb) != width * height * 3:
         raise ValueError("pixel buffer does not match dims")
     img = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(height, width, 3).astype(
         np.float64
     )
-    R, G, B = img[..., 0], img[..., 1], img[..., 2]
-    # JFIF color transform; planes kept in 0..255 space (the shared
-    # block codec level-shifts by 128 itself)
-    Y = 0.299 * R + 0.587 * G + 0.114 * B
-    Cb = 128.0 - 0.168736 * R - 0.331264 * G + 0.5 * B
-    Cr = 128.0 + 0.5 * R - 0.418688 * G - 0.081312 * B
-    mw, mh = 8 * hs, 8 * vs  # MCU pixel dims
-    ph = (height + mh - 1) // mh * mh
-    pw = (width + mw - 1) // mw * mw
-    pad = ((0, ph - height), (0, pw - width))
-    Yp = np.pad(Y, pad, mode="edge")
+    r, g, b = img[..., 0], img[..., 1], img[..., 2]
+    planes = [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
+        128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
+    ]
+    return planes, _JPEG_SUBSAMPLE[subsample]
 
-    def _sub(plane):
-        # mean over each (vs x hs) luma patch -> one chroma sample
-        p = np.pad(plane, pad, mode="edge")
-        return p.reshape(ph // vs, vs, pw // hs, hs).mean(axis=(1, 3))
 
-    Cbs, Crs = _sub(Cb), _sub(Cr)
+def _gray_plane(width: int, height: int, pixels: bytes) -> list:
+    import numpy as np
+
+    if len(pixels) != width * height:
+        raise ValueError("pixel buffer does not match dims")
+    img = np.frombuffer(bytes(pixels), dtype=np.uint8).reshape(height, width)
+    return [img.astype(np.float64)]
+
+
+def _jpeg_encode(
+    sof: int, width: int, height: int, planes, comps, qtables, dht, script,
+    restart_interval: int = 0,
+) -> bytes:
+    """Encode full-resolution component planes as a JPEG.
+
+    `comps` are (id, h, v, quant table, DC table, AC table) per plane;
+    each plane is edge-padded to whole MCUs, mean-subsampled to its
+    (h, v) and DCT-quantized. `script` lists the scans as
+    (component index or None for all, Ss, Se, Ah, Al): one (None, 0, 63,
+    0, 0) scan for a sequential frame (restarts every `restart_interval`
+    MCUs), DC and AC first/refinement scans for a progressive one. An
+    SOS names only the tables its scan uses."""
+    import numpy as np
+
+    sampling = [(h, v) for _c, h, v, _q, _dc, _ac in comps]
+    hmax, vmax, cols, rows = _mcu_grid(width, height, sampling)
+    ph, pw = rows * 8 * vmax, cols * 8 * hmax
     d = _dct_matrix()
-    ql = np.array(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    qc = np.array(_JPEG_QTABLE_CHROMA, dtype=np.float64).reshape(8, 8)
-    # r18: Cb and Cr share dims and quant table, so one vstacked
-    # _dct_quant_plane call covers both (the DCT einsum is per-8x8-block
-    # independent, so each block's float ops are unchanged; stacking
-    # along rows keeps every block intact because the chroma height is
-    # a multiple of 8). Saves one einsum dispatch per encode.
-    zzCbCr = _dct_quant_plane(np.concatenate([Cbs, Crs], axis=0), qc, d)
-    nrows = Cbs.shape[0] // 8
-    return (
-        hs,
-        vs,
-        ph,
-        pw,
-        _dct_quant_plane(Yp, ql, d),
-        zzCbCr[:nrows],
-        zzCbCr[nrows:],
+    zz = []
+    for plane, (h, v), comp in zip(planes, sampling, comps):
+        p = np.pad(plane, ((0, ph - height), (0, pw - width)), mode="edge")
+        fy, fx = vmax // v, hmax // h
+        if fy * fx > 1:
+            p = p.reshape(ph // fy, fy, pw // fx, fx).mean(axis=(1, 3))
+        q = np.array(qtables[comp[3]], dtype=np.float64).reshape(8, 8)
+        zz.append(_dct_quant_plane(p, q, d).reshape(-1, 64))
+    codes = {tc: _huff_codes(bits, vals) for tc, bits, vals in dht}
+    dc_codes = [codes[comp[4]] for comp in comps]
+    ac_codes = [codes[0x10 | comp[5]] for comp in comps]
+    out = bytearray(_jpeg_header(sof, width, height, comps, qtables, dht, restart_interval))
+    for ci, ss, se, ah, al in script:
+        order = _scan_order(width, height, sampling, ci)
+        w = _BitWriter()
+        if sof == 0xC0:
+            blocks = [z.tolist() for z in zz]
+            interval = restart_interval * sum(h * v for h, v in sampling)
+            prev = [0] * len(comps)
+            for k, (c, b) in enumerate(order):
+                if interval and k and k % interval == 0:
+                    w.raw(bytes([0xFF, 0xD0 + (k // interval - 1) % 8]))
+                    prev = [0] * len(comps)
+                prev[c] = _entropy_encode_block(
+                    w, blocks[c][b], dc_codes[c], ac_codes[c], prev[c]
+                )
+        elif ss == 0:
+            dcs = [(z[:, 0] >> al).tolist() for z in zz]
+            prev = [0] * len(comps)
+            for c, b in order:
+                if ah:  # refinement: the next bit of every DC, raw
+                    w.put(dcs[c][b] & 1, 1)
+                    continue
+                diff = dcs[c][b] - prev[c]
+                prev[c] = dcs[c][b]
+                s = diff.bit_length() if diff >= 0 else (-diff).bit_length()
+                ln, code = dc_codes[c][s]
+                w.put(code, ln)
+                if s:
+                    w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
+        else:
+            band = zz[ci][[b for _c, b in order]]
+            encode_band = _encode_ac_refine if ah else _encode_ac_first
+            encode_band(w, band, ss, se, al, ac_codes[ci])
+        specs = [
+            x
+            for cid, _h, _v, _q, dc, ac in (comps if ci is None else (comps[ci],))
+            for x in (cid, (dc << 4 if ss == 0 else 0) | (ac if se else 0))
+        ]
+        sos = bytes([len(specs) // 2, *specs, ss, se, (ah << 4) | al])
+        out += _jpeg_segment(0xDA, sos) + w.flush()
+    return bytes(out + b"\xff\xd9")
+
+
+#: what the encoders emit: Huffman tables (class << 4 | id, bits,
+#: values), component specs (id, h, v, quant table, DC table, AC table)
+#: and scan scripts (component index or None for all, Ss, Se, Ah, Al)
+_DHT_LUMA = ((0x00, _DC_BITS, _DC_VALUES), (0x10, _AC_BITS, _AC_VALUES))
+_DHT_CHROMA = (
+    (0x01, _DC_BITS_CHROMA, _DC_VALUES_CHROMA),
+    (0x11, _AC_BITS_CHROMA, _AC_VALUES_CHROMA),
+)
+_DHT_PROGRESSIVE_AC = (0x10, _AC_BITS_PROG, _AC_VALUES_PROG)
+_GRAY_COMPS = ((1, 1, 1, 0, 0, 0),)
+_SEQUENTIAL_SCRIPT = ((None, 0, 63, 0, 0),)
+#: DC first (Al=1), AC first for bands 1-5 and 6-63 (Al=1), then the
+#: DC and both AC refinements
+_GRAY_SCRIPT = (
+    (None, 0, 0, 0, 1), (0, 1, 5, 0, 1), (0, 6, 63, 0, 1),
+    (None, 0, 0, 1, 0), (0, 1, 5, 1, 0), (0, 6, 63, 1, 0),
+)
+#: interleaved DC first (Al=1) and refinement, then an AC first (Al=1)
+#: and refinement pair over band 1-63 per component
+_COLOR_SCRIPT = ((None, 0, 0, 0, 1), (None, 0, 0, 1, 0)) + tuple(
+    (c, 1, 63, ah, al) for c in range(3) for ah, al in ((0, 1), (1, 0))
+)
+
+
+def _ycbcr_comps(hs: int, vs: int, chroma_ac: int) -> tuple:
+    return ((1, hs, vs, 0, 0, 0), (2, 1, 1, 1, 1, chroma_ac), (3, 1, 1, 1, 1, chroma_ac))
+
+
+def encode_jpeg_gray8(
+    width: int, height: int, pixels: bytes, restart_interval: int = 0
+) -> bytes:
+    """Baseline sequential JPEG, one grayscale component, Annex K
+    tables. Deterministic: same pixels -> same bytes. `restart_interval`
+    > 0 emits a DRI segment and RSTn markers every N MCUs (byte-aligned,
+    DC predictor reset) — the error-resilience feature most camera
+    JPEGs carry."""
+    return _jpeg_encode(
+        0xC0, width, height, _gray_plane(width, height, pixels), _GRAY_COMPS,
+        [_JPEG_QTABLE], _DHT_LUMA, _SEQUENTIAL_SCRIPT, restart_interval,
+    )
+
+
+def encode_jpeg_gray8_progressive(width: int, height: int, pixels: bytes) -> bytes:
+    """Progressive (SOF2) gray JPEG: the baseline encoder's coefficients
+    sent as six scans — DC first (Al=1), AC first for bands 1-5 and 6-63
+    (Al=1, EOBn runs), DC refinement, and AC refinement for both bands
+    (correction bits). Decodes to pixels bitwise-identical to the
+    baseline encoding of the same image."""
+    return _jpeg_encode(
+        0xC2, width, height, _gray_plane(width, height, pixels), _GRAY_COMPS,
+        [_JPEG_QTABLE], (_DHT_LUMA[0], _DHT_PROGRESSIVE_AC), _GRAY_SCRIPT,
     )
 
 
@@ -4662,559 +4668,25 @@ def encode_jpeg_color(
     the luma block(s) then Cb then Cr, Annex K luma+chroma tables.
     Deterministic: same pixels -> same bytes. `restart_interval` > 0
     emits DRI/RSTn every N MCUs with all three DC predictors reset."""
-    import struct as _s
-
-    import numpy as np
-
-    hs, vs, ph, pw, zzY, zzCb, zzCr = _color_quant_blocks(
-        width, height, rgb, subsample
+    planes, (hs, vs) = _ycbcr_planes(width, height, rgb, subsample)
+    return _jpeg_encode(
+        0xC0, width, height, planes, _ycbcr_comps(hs, vs, 1),
+        [_JPEG_QTABLE, _JPEG_QTABLE_CHROMA], _DHT_LUMA + _DHT_CHROMA,
+        _SEQUENTIAL_SCRIPT, restart_interval,
     )
-    mw, mh = 8 * hs, 8 * vs  # MCU pixel dims
-    ldc = _huff_codes(_DC_BITS, _DC_VALUES)
-    lac = _huff_codes(_AC_BITS, _AC_VALUES)
-    cdc = _huff_codes(_DC_BITS_CHROMA, _DC_VALUES_CHROMA)
-    cac = _huff_codes(_AC_BITS_CHROMA, _AC_VALUES_CHROMA)
-    w = _BitWriter()
-    prev = [0, 0, 0]  # Y, Cb, Cr DC predictors
-    mcu = 0
-    luma_offsets = [(dy, dx) for dy in range(vs) for dx in range(hs)]
-    for my in range(0, ph, mh):
-        for mx in range(0, pw, mw):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                w.raw(bytes([0xFF, 0xD0 + (mcu // restart_interval - 1) % 8]))
-                prev = [0, 0, 0]
-            mcu += 1
-            for dy, dx in luma_offsets:
-                prev[0] = _entropy_encode_block(
-                    w, zzY[my // 8 + dy, mx // 8 + dx], ldc, lac, prev[0]
-                )
-            cy, cx = my // mh, mx // mw  # one chroma block per MCU
-            prev[1] = _entropy_encode_block(w, zzCb[cy, cx], cdc, cac, prev[1])
-            prev[2] = _entropy_encode_block(w, zzCr[cy, cx], cdc, cac, prev[2])
-    entropy = w.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    dqt = seg(
-        0xFFDB,
-        bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64))
-        + bytes([1]) + bytes(_JPEG_QTABLE_CHROMA[_ZIGZAG[i]] for i in range(64)),
-    )
-    # components: Y id1 with the mode's (h, v) sampling, qtab0; Cb/Cr 1x1 qtab1
-    y_sampling = (hs << 4) | vs
-    sof = seg(
-        0xFFC0,
-        _s.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, y_sampling, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht = seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALUES)
-        + bytes([0x01]) + bytes(_DC_BITS_CHROMA) + bytes(_DC_VALUES_CHROMA)
-        + bytes([0x11]) + bytes(_AC_BITS_CHROMA) + bytes(_AC_VALUES_CHROMA),
-    )
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    dri = seg(0xFFDD, _s.pack(">H", restart_interval)) if restart_interval else b""
-    return b"\xff\xd8" + dqt + sof + dht + dri + sos + entropy + b"\xff\xd9"
-
-
-@_malformed_raises_value_error
-def decode_jpeg_color(data: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline interleaved 3-component (YCbCr) JPEG back to
-    (width, height, interleaved RGB bytes). Supports per-component
-    sampling factors up to 2x2 (covers 4:2:0, 4:2:2, 4:4:4), multiple
-    DQT/DHT tables, and DRI/RSTn restart markers. Raises ValueError on
-    malformed streams or non-baseline frames."""
-    import struct as _s
-
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []  # (id, h, v, qtab_id)
-    scan_tables: dict[int, tuple[int, int]] = {}  # comp id -> (dc_id, ac_id)
-    entropy_start = None
-    restart_interval = 0
-    while i < len(data):
-        if i + 2 > len(data):
-            raise ValueError("truncated JPEG (marker cut off)")
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if m == 0xD9:
-            break
-        if i + 4 > len(data):
-            raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
-            raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
-        if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
-                tab = [0] * 64
-                for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC0:
-            height, width = _s.unpack_from(">HH", body, 1)
-            ncomp = body[5]
-            if ncomp != 3:
-                raise ValueError("decode_jpeg_color expects a 3-component frame")
-            for c in range(3):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-        elif m in (0xC1, 0xC2, 0xC3):
-            raise ValueError("only baseline sequential (SOF0) supported")
-        elif m == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                values = list(body[j + 17 : j + 17 + n])
-                huff[(tc, th)] = _huff_decode_table(bits, values)
-                j += 17 + n
-        elif m == 0xDA:
-            ns = body[0]
-            for c in range(ns):
-                cid = body[1 + 2 * c]
-                scan_tables[cid] = (body[2 + 2 * c] >> 4, body[2 + 2 * c] & 0x0F)
-            entropy_start = i + 2 + length
-            break
-        elif m == 0xDD:
-            restart_interval = _s.unpack_from(">H", body, 0)[0]
-        i += 2 + length
-    if width is None or entropy_start is None or not comps:
-        raise ValueError("missing SOF/SOS")
-    end = data.rfind(b"\xff\xd9")
-    if end < 0:
-        raise ValueError("missing EOI")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1 for c in comps):
-        raise ValueError("sampling factors beyond 2x2 unsupported")
-    mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    d = _dct_matrix()
-    planes = []
-    for cid, ch, cv, tq in comps:
-        planes.append(np.zeros((mcus_y * 8 * cv, mcus_x * 8 * ch), dtype=np.float64))
-    r = _BitReader(data[entropy_start:end])
-    prev = [0, 0, 0]
-    mcu = 0
-    dct_c = [huff[(0, scan_tables[cid][0])] for cid, _h, _v, _t in comps]
-    act_c = [huff[(1, scan_tables[cid][1])] for cid, _h, _v, _t in comps]
-    q_c = [
-        np.array(qtab[tq], dtype=np.float64).reshape(8, 8)
-        for _cid, _h, _v, tq in comps
-    ]
-    zz_c: list[list] = [[] for _ in comps]
-    pos_c: list[list] = [[] for _ in comps]
-    for myi in range(mcus_y):
-        for mxi in range(mcus_x):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                r.expect_restart()
-                prev = [0, 0, 0]
-            mcu += 1
-            for ci, (cid, ch, cv, tq) in enumerate(comps):
-                for by in range(cv):
-                    for bx in range(ch):
-                        zz, prev[ci] = _entropy_decode_block(
-                            r, dct_c[ci], act_c[ci], prev[ci]
-                        )
-                        zz_c[ci].append(zz)
-                        pos_c[ci].append((myi * cv + by, mxi * ch + bx))
-    # batched dequant + IDCT per component, then place blocks. Cb/Cr
-    # share a quant table in the streams we emit — IDCT them as one
-    # stacked call (per-block float ops identical; einsum is per-block
-    # independent), falling back to per-component otherwise.
-    blocks_by_ci: list = [None] * len(comps)
-    if (
-        len(comps) == 3
-        and comps[1][3] == comps[2][3]
-        and len(zz_c[1]) == len(zz_c[2])
-    ):
-        both = _idct_blocks(zz_c[1] + zz_c[2], q_c[1], d)
-        blocks_by_ci[1], blocks_by_ci[2] = both[: len(zz_c[1])], both[len(zz_c[1]) :]
-    for ci in range(len(comps)):
-        blocks = (
-            blocks_by_ci[ci]
-            if blocks_by_ci[ci] is not None
-            else _idct_blocks(zz_c[ci], q_c[ci], d)
-        )
-        for (byi, bxi), block in zip(pos_c[ci], blocks):
-            planes[ci][byi * 8 : byi * 8 + 8, bxi * 8 : bxi * 8 + 8] = block
-    # upsample each component to full resolution (sample replication)
-    full = []
-    for (cid, ch, cv, tq), plane in zip(comps, planes):
-        up = np.repeat(np.repeat(plane, vmax // cv, axis=0), hmax // ch, axis=1)
-        full.append(up[:height, :width])
-    Y, Cb, Cr = full[0], full[1] - 128.0, full[2] - 128.0
-    R = Y + 1.402 * Cr
-    G = Y - 0.344136 * Cb - 0.714136 * Cr
-    B = Y + 1.772 * Cb
-    rgb = np.clip(np.rint(np.stack([R, G, B], axis=-1)), 0, 255).astype(np.uint8)
-    return width, height, rgb.tobytes()
-
-
-# --- PROGRESSIVE (SOF2) COLOR JPEG codec ------------------------------------
-# The gray progressive machinery applied to YCbCr: ONE interleaved DC
-# scan pair (MCU order, per-component predictors — required first by
-# the spec) and per-component AC scan pairs (progressive AC scans are
-# always non-interleaved, covering the component's OWN block grid, not
-# the MCU-padded one). Coefficients are byte-for-byte the sequential
-# encoder's, so the round trip is verified by bitwise pixel equality
-# against decode_jpeg_color of the sequential stream.
-
-
-def _comp_spec_grid(width, height, ch, cv, hmax, vmax):
-    """Block rows/cols of a component's NON-interleaved scan per T.81
-    A.2.2: computed from the component's own sample dims, a subgrid of
-    the MCU-padded plane grid."""
-    cw = -(-width * ch // hmax)
-    chh = -(-height * cv // vmax)
-    return -(-chh // 8), -(-cw // 8)
 
 
 def encode_jpeg_color_progressive(
     width: int, height: int, rgb: bytes, subsample: bool | str = "420"
 ) -> bytes:
-    """REAL progressive (SOF2) COLOR JPEG encoder: the sequential color
-    encoder's exact coefficient planes transmitted as 10 scans —
-    interleaved DC first (Al=1) + DC refinement over all three
-    components in MCU order, then per-component AC first/refinement
-    pairs for band 1-63 with EOBn runs. Pixels decode bitwise-equal to
-    the sequential stream's (property-tested)."""
-    import struct as _s
-
-    hs, vs, ph, pw, zzY, zzCb, zzCr = _color_quant_blocks(
-        width, height, rgb, subsample
+    """Progressive (SOF2) COLOR JPEG: the sequential color encoder's
+    coefficients sent as 10 scans — interleaved DC first (Al=1) and DC
+    refinement over all three components in MCU order, then per
+    component an AC first/refinement pair for band 1-63 with EOBn runs.
+    Pixels decode bitwise-equal to the sequential stream's."""
+    planes, (hs, vs) = _ycbcr_planes(width, height, rgb, subsample)
+    return _jpeg_encode(
+        0xC2, width, height, planes, _ycbcr_comps(hs, vs, 0),
+        [_JPEG_QTABLE, _JPEG_QTABLE_CHROMA],
+        (_DHT_LUMA[0], _DHT_CHROMA[0], _DHT_PROGRESSIVE_AC), _COLOR_SCRIPT,
     )
-    ldc = _huff_codes(_DC_BITS, _DC_VALUES)
-    cdc = _huff_codes(_DC_BITS_CHROMA, _DC_VALUES_CHROMA)
-    pac = _huff_codes(_AC_BITS_PROG, _AC_VALUES_PROG)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return _s.pack(">HH", marker, len(payload) + 2) + payload
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(
-        0xFFDB,
-        bytes([0]) + bytes(_JPEG_QTABLE[_ZIGZAG[i]] for i in range(64))
-        + bytes([1]) + bytes(_JPEG_QTABLE_CHROMA[_ZIGZAG[i]] for i in range(64)),
-    )
-    y_sampling = (hs << 4) | vs
-    out += seg(
-        0xFFC2,
-        _s.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, y_sampling, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    out += seg(
-        0xFFC4,
-        bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALUES)
-        + bytes([0x01]) + bytes(_DC_BITS_CHROMA) + bytes(_DC_VALUES_CHROMA)
-        + bytes([0x10]) + bytes(_AC_BITS_PROG) + bytes(_AC_VALUES_PROG),
-    )
-    dc_tables = (ldc, cdc, cdc)
-    luma_offsets = [(dy, dx) for dy in range(vs) for dx in range(hs)]
-
-    # DC planes as plain int grids once (r18: both DC scans walked the
-    # full MCU traversal reading numpy scalars per block)
-    dcY = zzY[:, :, 0].tolist()
-    dcCb = zzCb[:, :, 0].tolist()
-    dcCr = zzCr[:, :, 0].tolist()
-
-    def mcu_dcs():
-        """Every block's DC coefficient in interleaved MCU order, tagged
-        with its component index (the DC scan traversal)."""
-        for my in range(0, ph, 8 * vs):
-            for mx in range(0, pw, 8 * hs):
-                for dy, dx in luma_offsets:
-                    yield 0, dcY[my // 8 + dy][mx // 8 + dx]
-                cy, cx = my // (8 * vs), mx // (8 * hs)
-                yield 1, dcCb[cy][cx]
-                yield 2, dcCr[cy][cx]
-
-    # scan 1: interleaved DC first, Al=1
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for ci, dc in mcu_dcs():
-        v = dc >> 1
-        diff = v - prev[ci]
-        prev[ci] = v
-        s = _category(diff)
-        ln, code = dc_tables[ci][s]
-        w.put(code, ln)
-        if s:
-            w.put(diff if diff > 0 else diff + (1 << s) - 1, s)
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01])) + w.flush()
-    # scan 2: interleaved DC refinement — one raw bit per block
-    w = _BitWriter()
-    for _ci, dc in mcu_dcs():
-        w.put(dc & 1, 1)
-    out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10])) + w.flush()
-    # per-component AC pairs over the component's spec grid
-    comp_zz = (zzY, zzCb, zzCr)
-    comp_hv = ((hs, vs), (1, 1), (1, 1))
-    for ci, cid in enumerate((1, 2, 3)):
-        ch, cv = comp_hv[ci]
-        by, bx = _comp_spec_grid(width, height, ch, cv, hs, vs)
-        blocks = [comp_zz[ci][y, x] for y in range(by) for x in range(bx)]
-        for ah, al in ((0, 1), (1, 0)):
-            w = _BitWriter()
-            if ah == 0:
-                _encode_ac_first(w, blocks, 1, 63, al, pac)
-            else:
-                _encode_ac_refine(w, blocks, 1, 63, al, pac)
-            out += seg(0xFFDA, bytes([1, cid, 0x00, 1, 63, (ah << 4) | al]))
-            out += w.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-@_malformed_raises_value_error
-def decode_jpeg_color_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive (SOF2) COLOR JPEG decoder: interleaved DC scans
-    (first + refinement, per-component predictors in MCU order) and
-    non-interleaved per-component AC scans with spectral selection,
-    successive approximation and EOBn runs, accumulating each
-    component's coefficient grid across scans; then the same
-    dequantize/IDCT/upsample/YCbCr->RGB tail as the sequential
-    decoder. Restart markers inside scans are unsupported; everything
-    malformed raises ValueError."""
-    import struct as _s
-
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    qtab: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comps: list[tuple[int, int, int, int]] = []
-    blocks_c: list[list[list[int]]] = []  # per comp: padded-grid raster blocks
-    grid_c: list[tuple[int, int]] = []  # per comp: padded (rows, cols)
-    hmax = vmax = 1
-    dc_done = False
-    while i < len(data):
-        if i + 2 > len(data):
-            raise ValueError("truncated JPEG (marker cut off)")
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if m == 0xD9:
-            break
-        if i + 4 > len(data):
-            raise ValueError("truncated JPEG (segment length cut off)")
-        length = _s.unpack_from(">H", data, i + 2)[0]
-        if i + 2 + length > len(data):
-            raise ValueError("truncated JPEG (segment body cut off)")
-        body = data[i + 4 : i + 2 + length]
-        if m == 0xDB:
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = list(body[j + 1 : j + 65])
-                tab = [0] * 64
-                for k in range(64):
-                    tab[_ZIGZAG[k]] = zz[k]
-                qtab[tq] = tab
-                j += 65
-        elif m == 0xC2:
-            height, width = _s.unpack_from(">HH", body, 1)
-            if body[5] != 3:
-                raise ValueError("decode_jpeg_color_progressive expects 3 components")
-            for c in range(3):
-                hv = body[7 + 3 * c]
-                comps.append((body[6 + 3 * c], hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1 for c in comps):
-                raise ValueError("sampling factors beyond 2x2 unsupported")
-            mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-            for _cid, ch, cv, _tq in comps:
-                rows, cols = mcus_y * cv, mcus_x * ch
-                grid_c.append((rows, cols))
-                blocks_c.append([[0] * 64 for _ in range(rows * cols)])
-        elif m in (0xC0, 0xC1, 0xC3):
-            raise ValueError("not a progressive (SOF2) stream")
-        elif m == 0xC4:
-            j = 0
-            while j < len(body):
-                tc, th = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                huff[(tc, th)] = _huff_decode_table(bits, list(body[j + 17 : j + 17 + n]))
-                j += 17 + n
-        elif m == 0xDD:
-            if _s.unpack_from(">H", body, 0)[0]:
-                raise ValueError("restart markers unsupported in progressive")
-        elif m == 0xDA:
-            if not comps:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            ss, se, ahl = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            ah, al = ahl >> 4, ahl & 0x0F
-            j = i + 2 + length
-            while j + 1 < len(data) and not (
-                data[j] == 0xFF
-                and data[j + 1] != 0x00
-                and not 0xD0 <= data[j + 1] <= 0xD7
-            ):
-                j += 1
-            r = _BitReader(data[i + 2 + length : j])
-            cid_to_ci = {c[0]: k for k, c in enumerate(comps)}
-            if ss == 0:
-                if se != 0 or ns != 3:
-                    raise ValueError("DC scan must be interleaved with Se=0")
-                order = []  # (ci, block-index) in MCU order
-                mcus_x = grid_c[0][1] // comps[0][1]
-                mcus_y = grid_c[0][0] // comps[0][2]
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        for ci, (_cid, ch, cv, _tq) in enumerate(comps):
-                            for dy in range(cv):
-                                for dx in range(ch):
-                                    order.append(
-                                        (ci, (my * cv + dy) * grid_c[ci][1] + mx * ch + dx)
-                                    )
-                if ah == 0:
-                    tabs = []
-                    for c in range(ns):
-                        ci = cid_to_ci[body[1 + 2 * c]]
-                        t = huff.get((0, body[2 + 2 * c] >> 4))
-                        if t is None:
-                            raise ValueError("missing DC Huffman table")
-                        tabs.append((ci, t))
-                    tab_by_ci = dict(tabs)
-                    prev = [0] * len(comps)
-                    for ci, bi in order:
-                        s = _read_symbol(r, tab_by_ci[ci])
-                        prev[ci] += _extend(r.bits(s), s) if s else 0
-                        blocks_c[ci][bi][0] = prev[ci] << al
-                    dc_done = True
-                else:
-                    # one raw bit per block regardless of content —
-                    # batch the reads in chunks (same bits, same order)
-                    p1 = 1 << al
-                    i0 = 0
-                    while i0 < len(order):
-                        chunk = order[i0 : i0 + 32]
-                        v = r.bits(len(chunk))
-                        m = 1 << (len(chunk) - 1)
-                        for ci, bi in chunk:
-                            if v & m:
-                                blocks_c[ci][bi][0] |= p1
-                            m >>= 1
-                        i0 += len(chunk)
-            else:
-                if ns != 1:
-                    raise ValueError("progressive AC scans must be single-component")
-                if not dc_done:
-                    raise ValueError("AC scan before first DC scan")
-                ci = cid_to_ci[body[1]]
-                act = huff.get((1, body[2] & 0x0F))
-                if act is None:
-                    raise ValueError("missing AC Huffman table")
-                _cid, ch, cv, _tq = comps[ci]
-                sby, sbx = _comp_spec_grid(width, height, ch, cv, hmax, vmax)
-                cols = grid_c[ci][1]
-                sel = [
-                    blocks_c[ci][y * cols + x]
-                    for y in range(sby)
-                    for x in range(sbx)
-                ]
-                if se > 63 or ss > se:
-                    raise ValueError("bad spectral band")
-                if ah == 0:
-                    _decode_ac_first_scan(r, sel, ss, se, al, act)
-                else:
-                    if al != ah - 1:
-                        raise ValueError("refinement must lower Al by 1")
-                    _decode_ac_refine_scan(r, sel, ss, se, al, act)
-            i = j
-            continue
-        i += 2 + length
-    if width is None or not comps or not dc_done:
-        raise ValueError("missing SOF2/DC scan")
-    d = _dct_matrix()
-    # Cb/Cr share grid and quant table in the streams we emit — IDCT
-    # them as one stacked call when reached in loop order (per-block
-    # float ops identical; lazy so a missing quant table raises the
-    # same KeyError the per-component order raised)
-    can_merge = (
-        len(comps) == 3
-        and grid_c[1] == grid_c[2]
-        and comps[1][3] == comps[2][3]
-    )
-    idct_by_ci: list = [None] * len(comps)
-    planes = []
-    for ci, (cid, ch, cv, tq) in enumerate(comps):
-        rows, cols = grid_c[ci]
-        if idct_by_ci[ci] is None:
-            q = np.array(qtab[tq], dtype=np.float64).reshape(8, 8)
-            if ci == 1 and can_merge:
-                both = _idct_blocks(blocks_c[1] + blocks_c[2], q, d)
-                n1 = len(blocks_c[1])
-                idct_by_ci[1], idct_by_ci[2] = both[:n1], both[n1:]
-            else:
-                idct_by_ci[ci] = _idct_blocks(blocks_c[ci], q, d)
-        out = (
-            idct_by_ci[ci]
-            .reshape(rows, cols, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(rows * 8, cols * 8)
-        )
-        planes.append(
-            np.repeat(np.repeat(out, vmax // cv, axis=0), hmax // ch, axis=1)[
-                :height, :width
-            ]
-        )
-    Y, Cb, Cr = planes[0], planes[1] - 128.0, planes[2] - 128.0
-    R = Y + 1.402 * Cr
-    G = Y - 0.344136 * Cb - 0.714136 * Cr
-    B = Y + 1.772 * Cb
-    rgb = np.clip(np.rint(np.stack([R, G, B], axis=-1)), 0, 255).astype(np.uint8)
-    return width, height, rgb.tobytes()
-
-
-@_malformed_raises_value_error
-def decode_jpeg_color_any(data: bytes) -> tuple[int, int, bytes]:
-    """Color JPEG decode dispatching on the frame type via a real
-    marker walk: SOF0 -> sequential decoder, SOF2 -> progressive."""
-    import struct as _s
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at {i}")
-        m = data[i + 1]
-        if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-            return (
-                decode_jpeg_color_progressive(data)
-                if m == 0xC2
-                else decode_jpeg_color(data)
-            )
-        if m == 0xD9 or m == 0xDA:
-            break
-        i += 2 + _s.unpack_from(">H", data, i + 2)[0]
-    raise ValueError("no frame header before scan/EOI")

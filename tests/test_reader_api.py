@@ -121,11 +121,10 @@ def test_multimodal_metadata_and_codec(spark):
     assert out[1]["width"] == 1 + 0xFF % 64 and out[1]["channels"] == 3
 
 
-def test_multimodal_stub_raises_cleanly(spark):
+def test_map_media_batches_requires_a_codec(spark):
     df = spark.createDataFrame([(1, b"x")], "id long, blob binary")
-    decoded = map_media_batches(df, "blob", DECODED_IMAGE_SCHEMA)  # stub codec
-    with pytest.raises(Exception, match="imaging library"):
-        decoded.collect()
+    with pytest.raises(TypeError, match="codec"):
+        map_media_batches(df, "blob", DECODED_IMAGE_SCHEMA)
 
 
 def test_media_decode_corrupt_tolerance(spark):
@@ -668,3 +667,53 @@ def test_jpeg_progressive_large_image_multichunk_scans():
     # leak state between encodes/decodes)
     assert encode_jpeg_gray8_progressive(w, h, px) == prog
     assert decode_jpeg_gray8_any(prog) == decode_jpeg_gray8_any(prog)
+
+
+def test_jpeg_huffman_tables_are_immutable():
+    """Every encode and decode shares the memoized Huffman tables, so
+    writing to one must raise instead of corrupting later calls."""
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        _AC_BITS,
+        _AC_VALUES,
+        _huff_codes,
+        _huff_decode_table,
+    )
+
+    codes = _huff_codes(_AC_BITS, _AC_VALUES)
+    lut = _huff_decode_table(_AC_BITS, _AC_VALUES)
+    with pytest.raises(TypeError):
+        codes[0x00] = (1, 0)
+    with pytest.raises(TypeError):
+        lut.lut[0] = 0
+    with pytest.raises(TypeError):
+        lut.table[(1, 0)] = 0x00
+    assert _huff_codes(_AC_BITS, _AC_VALUES) is codes
+
+
+@pytest.mark.parametrize("seed", [1, 7, 11])
+def test_jpeg_gray_sampling_factors_do_not_shape_the_grid(seed):
+    """A 1-component frame's blocks tile the image whatever sampling
+    factors its SOF declares (T.81 A.2.2): a gray stream patched to
+    declare 2x2 sampling decodes bitwise-equal to the 1x1 original,
+    baseline and progressive, through the typed and the _any decoders."""
+    from redpanda_to_parquet_writer_spark.operators.multimodal import (
+        decode_jpeg_gray8,
+        decode_jpeg_gray8_any,
+        decode_jpeg_gray8_progressive,
+        encode_jpeg_gray8,
+        encode_jpeg_gray8_progressive,
+        synth_gray_image,
+    )
+
+    w, h, px = synth_gray_image(seed)
+    assert w % 16 and h % 16  # 2x2 MCUs would pad differently
+    for encode, decode, sof in (
+        (encode_jpeg_gray8, decode_jpeg_gray8, b"\xff\xc0"),
+        (encode_jpeg_gray8_progressive, decode_jpeg_gray8_progressive, b"\xff\xc2"),
+    ):
+        blob = encode(w, h, px)
+        hv = blob.index(sof) + 11  # FF Cn, length, P, Y, X, Nf, C1, then H1V1
+        assert blob[hv] == 0x11
+        patched = blob[:hv] + b"\x22" + blob[hv + 1 :]
+        assert decode(patched) == decode(blob)
+        assert decode_jpeg_gray8_any(patched) == decode(blob)
