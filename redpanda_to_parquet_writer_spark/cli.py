@@ -183,6 +183,10 @@ def collector_main(argv: list[str] | None = None) -> int:
               f"duration_ms={phases or '-'} fmt={r.fmt} "
               f"sec={r.seconds:.2f} batches={r.n_batches} "
               f"rows_per_sec={r.rows_per_sec} validation={status}")
+        base = collector.output_root(r.topic)
+        for table, rows in sorted(r.committed.items()):
+            if table != base:  # a drifted batch's `<root>_v<fingerprint>` table
+                print(f"{r.topic}: drift table {table} rows={rows}")
     print(f"total rows committed this run across {len(run.reports)} topic(s): "
           f"{run.total_rows}")
     return 0

@@ -30,18 +30,22 @@ anti-join backstop.
 Kept phases (this module): topic discovery/fan-out, format verdict
 caching, post-run validation, retention trim, run summary.
 
-At scale: one streaming query per topic each with its own checkpoint —
-queries are independent, so a 1000-topic deployment schedules them across
-the cluster (or groups small topics via subscribePattern on one query
-partitioned by topic).
+At scale: one streaming query per topic, each with its own checkpoint.
+The queries share nothing, so `Collector.run` drains topics side by side
+on at most `defaultParallelism` threads and one run costs about
+its slowest topic rather than the sum of all of them. A deployment with
+far more topics than cores can instead group small topics via
+subscribePattern on one query partitioned by topic.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from redpanda_to_parquet_writer_spark.config import EngineConfig
 from redpanda_to_parquet_writer_spark.operators.decode import detect_format
@@ -76,6 +80,9 @@ class TopicRunReport:
     rows_per_sec: float = 0.0
     #: every streaming `durationMs` phase, summed over this run's triggers
     duration_ms: dict[str, int] = field(default_factory=dict)
+    #: rows this run committed per table: the base root plus any
+    #: `<root>_v<fingerprint>` table a drifted batch was routed to
+    committed: dict[str, int] = field(default_factory=dict)
 
 
 @dataclass
@@ -142,6 +149,7 @@ class Collector:
             rows_in=drain.rows_in,
             rows_per_sec=drain.rows_per_sec,
             duration_ms=drain.duration_ms,
+            committed=drain.committed,
         )
 
     def run(
@@ -150,28 +158,40 @@ class Collector:
         samples: dict[str, list[bytes]] | None = None,
         high_watermarks: dict[str, dict[int, int]] | None = None,
     ) -> CollectorRun:
-        """Fan out over topics, then validate (V1/V2) when enabled.
+        """Drain every topic concurrently, then validate V2 when enabled.
+
+        Each topic's unit of work (V1's count before the run, `run_topic`,
+        then V1) runs on its own thread, at most `defaultParallelism` at
+        once. Topics share no state: each has its own query, checkpoint
+        and sink. Threads inherit the caller's job group and local
+        properties, so their Spark jobs carry the caller's tags.
+        Reports come back in input topic order.
 
         V1 per topic: the sink's row count before the run plus the rows
         the run committed must equal its count after the run.
 
-        Topics run sequentially here; each ingest is itself fully
-        parallel inside Spark. Concurrent queries (ThreadPool over
-        `run_topic`) are safe — separate checkpoints — when topic count
-        dwarfs per-topic data.
+        A failing topic never cuts another topic's drain short: every
+        topic runs to its end, then the first error in input topic order
+        is raised.
         """
-        run = CollectorRun()
+        if len(set(topics)) != len(topics):
+            # two drains of one topic would share its checkpoint
+            raise ValueError(f"duplicate topics in {topics}")
         samples = samples or {}
-        validate = not self.cfg.skip_validation
-        for topic in topics:
-            root = self.output_root(topic)
-            before = sink_row_count(self.spark, root) if validate else 0
-            report = self.run_topic(topic, samples.get(topic))
-            if validate:
-                report.validation = internal_consistency(
-                    self.spark, root, before + report.rows_written
+        workers = max(1, min(len(topics), self.spark.sparkContext.defaultParallelism))
+        with ThreadPoolExecutor(workers, thread_name_prefix="collector") as pool:
+            # wrap once per topic: each wrapper holds its own copy of the
+            # caller's local properties, and one copy shared by threads
+            # would leak each SQL execution id into the other threads
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(self.spark)(self._run_validated),
+                    topic,
+                    samples.get(topic),
                 )
-            run.reports.append(report)
+                for topic in topics
+            ]
+        run = CollectorRun(reports=[f.result() for f in futures])
         if high_watermarks and not self.cfg.skip_validation:
             for topic, marks in high_watermarks.items():
                 # per-partition external completeness report (V2)
@@ -180,6 +200,18 @@ class Collector:
                 )
                 run.completeness[topic] = [r.asDict() for r in report.collect()]
         return run
+
+    def _run_validated(self, topic: str, sample: list[bytes] | None) -> TopicRunReport:
+        """`run_topic` between V1's two counts (when validation is on)."""
+        validate = not self.cfg.skip_validation
+        root = self.output_root(topic)
+        before = sink_row_count(self.spark, root) if validate else 0
+        report = self.run_topic(topic, sample)
+        if validate:
+            report.validation = internal_consistency(
+                self.spark, root, before + report.rows_written
+            )
+        return report
 
 
 def trim_kafka_retention(

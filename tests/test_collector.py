@@ -130,29 +130,218 @@ def test_v1_flags_sink_damaged_between_drain_and_validation(
     assert abs(v1.expected - v1.actual) == damaged["rows"] > 0
 
 
-def test_concurrent_topic_drains(spark, tmp_path, collector):
-    """The docstring's ThreadPool-over-run_topic pattern: separate
-    checkpoints make concurrent drains safe, and named queries keep each
-    topic's listener rollup to its OWN batches (no cross-contamination
-    on the shared listener bus)."""
-    from concurrent.futures import ThreadPoolExecutor
+def _sink_keys(spark, root):
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(root).select("kafka_partition", "kafka_offset").collect()
+    )
+
+
+def _source_keys(n, start=0):
+    """The fixture's (partition, offset) keys: offsets round-robin over
+    partitions 0..3."""
+    return sorted((o % 4, o) for o in range(start, start + n))
+
+
+def test_concurrent_topic_drains(spark, tmp_path, collector, monkeypatch):
+    """`Collector.run` drains its topics side by side: each drain waits
+    on a two-party barrier, so a one-topic-at-a-time loop breaks it.
+    Separate checkpoints keep the drains apart, and each query's own
+    progress keeps its report to its own batches."""
+    import threading
+
+    from redpanda_to_parquet_writer_spark import collector as collector_mod
 
     counts = {"topic_x": 30, "topic_y": 50}
+    starts = {"topic_x": 0, "topic_y": 100}
     for topic, n in counts.items():
         src = str(tmp_path / f"src_{topic}")
-        _envelope_df(spark, n=n).write.parquet(src)
+        _envelope_df(spark, n=n, start_offset=starts[topic]).write.parquet(src)
         collector._test_sources[topic] = src
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        reports = list(pool.map(collector.run_topic, counts))
+    both_in_flight = threading.Barrier(2, timeout=60)
+    drain = collector_mod.ingest_available_now
 
-    by_topic = {r.topic: r for r in reports}
-    for topic, n in counts.items():
-        assert by_topic[topic].rows_written == n
+    def drain_together(*args, **kwargs):
+        both_in_flight.wait()
+        return drain(*args, **kwargs)
+
+    monkeypatch.setattr(collector_mod, "ingest_available_now", drain_together)
+    reports = collector.run(list(counts)).reports
+
+    assert [r.topic for r in reports] == list(counts)
+    for r, (topic, n) in zip(reports, counts.items()):
+        assert r.rows_written == n
         assert _sink_counts(spark, collector, [topic]) == [n]
-        assert by_topic[topic].n_batches >= 1
-        assert by_topic[topic].rows_in == n
-        assert by_topic[topic].rows_per_sec > 0
+        assert _sink_keys(spark, collector.output_root(topic)) == _source_keys(n, starts[topic])
+        assert r.n_batches >= 1
+        assert r.rows_in == n
+        assert r.rows_per_sec > 0
+        assert (r.validation.status, r.validation.expected, r.validation.actual) == (PASS, n, n)
+
+
+def test_failing_topic_waits_for_the_others(spark, tmp_path, collector):
+    """A topic's error is raised only after every other topic ran to its
+    end; with several failures, the first in input topic order wins. The
+    healthy topic's drain is complete, so a re-run commits nothing."""
+    import time
+
+    src = str(tmp_path / "src_healthy")
+    _envelope_df(spark, n=40).write.parquet(src)
+    collector._test_sources["healthy"] = src
+    factory = collector.source_factory
+
+    def flaky_factory(topic, resume_offsets):
+        if topic == "broken_late":
+            time.sleep(0.5)  # fails after broken_early, yet comes first in input order
+            raise RuntimeError("broken_late: no source")
+        if topic == "broken_early":
+            raise RuntimeError("broken_early: no source")
+        return factory(topic, resume_offsets)
+
+    collector.source_factory = flaky_factory
+    with pytest.raises(RuntimeError, match="broken_late"):
+        collector.run(["broken_late", "healthy", "broken_early"])
+
+    assert _sink_keys(spark, collector.output_root("healthy")) == _source_keys(40)
+    (report,) = collector.run(["healthy"]).reports
+    assert report.rows_written == 0 and report.n_batches == 0
+    assert (report.validation.status, report.validation.actual) == (PASS, 40)
+
+
+def test_topic_threads_inherit_the_callers_job_group(spark, tmp_path, collector, monkeypatch):
+    """Topic threads carry the caller's job group, so V1's count jobs on
+    them are tagged with it (a plain thread in pinned-thread mode would
+    leave them untagged)."""
+    import threading
+    import time
+
+    from redpanda_to_parquet_writer_spark import collector as collector_mod
+
+    for topic in ("group_a", "group_b"):
+        src = str(tmp_path / f"src_{topic}")
+        _envelope_df(spark, n=20).write.parquet(src)
+        collector._test_sources[topic] = src
+
+    threads = []
+    v1 = collector_mod.internal_consistency
+
+    def v1_on_thread(*args, **kwargs):
+        threads.append(threading.current_thread())
+        return v1(*args, **kwargs)
+
+    monkeypatch.setattr(collector_mod, "internal_consistency", v1_on_thread)
+    sc = spark.sparkContext
+    group = "collector-test"
+    sc.setJobGroup(group, "collector job-group propagation")
+    try:
+        run = collector.run(["group_a", "group_b"])
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+
+    assert [r.validation.status for r in run.reports] == [PASS, PASS]
+    assert len(threads) == 2 and threading.main_thread() not in threads
+    # the status store is fed by the listener bus: give it time to catch up
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    # streaming jobs run in their query's own group and the caller's
+    # thread runs none, so every job here came from a topic thread
+    assert tracker.getJobIdsForGroup(group)
+
+
+def test_duplicate_topics_are_rejected(collector):
+    with pytest.raises(ValueError, match="duplicate topics"):
+        collector.run(["t", "u", "t"])
+
+
+def test_topic_fan_out_is_capped_at_default_parallelism(spark, tmp_path, monkeypatch):
+    """More topics than `defaultParallelism`: at most that many drains
+    are ever in flight at once, and the cap is reached."""
+    import threading
+
+    from redpanda_to_parquet_writer_spark import collector as collector_mod
+
+    topics = [f"t{i}" for i in range(6)]
+    for topic in topics:
+        _envelope_df(spark, n=4).write.parquet(str(tmp_path / "src" / topic))
+    cfg = EngineConfig(
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        skip_validation=True,
+    )
+    c = Collector(
+        spark,
+        cfg,
+        lambda topic, resume: spark.readStream.schema(ENVELOPE_COLS).parquet(
+            str(tmp_path / "src" / topic)
+        ),
+    )
+    cap = min(len(topics), spark.sparkContext.defaultParallelism)
+    lock = threading.Lock()
+    full = threading.Event()
+    state = {"in_flight": 0, "peak": 0}
+    drain = collector_mod.ingest_available_now
+
+    def counted_drain(*args, **kwargs):
+        with lock:
+            state["in_flight"] += 1
+            state["peak"] = max(state["peak"], state["in_flight"])
+            if state["in_flight"] >= cap:
+                full.set()
+        try:
+            full.wait(timeout=60)  # hold until the cap is reached once
+            return drain(*args, **kwargs)
+        finally:
+            with lock:
+                state["in_flight"] -= 1
+
+    monkeypatch.setattr(collector_mod, "ingest_available_now", counted_drain)
+    run = c.run(topics)
+    assert [r.topic for r in run.reports] == topics
+    assert [r.rows_written for r in run.reports] == [4] * len(topics)
+    assert state["peak"] == cap
+
+
+def test_drift_table_rows_are_reported_per_run(spark, tmp_path, collector, capsys):
+    """Rows a drifted batch routes to `<root>_v<fingerprint>` show up in
+    `committed` (and in the CLI), while `rows_written` and V1 stay on the
+    base table."""
+    from redpanda_to_parquet_writer_spark.cli import collector_main
+
+    src = tmp_path / "src" / "ticks"
+    _envelope_df(spark, n=20).write.parquet(str(src))
+    argv = [
+        "--file-source", str(tmp_path / "src"),
+        "--output-dir", collector.cfg.output_dir,
+        "--checkpoint-dir", collector.cfg.checkpoint_dir,
+    ]
+    assert collector_main(argv) == 0
+    capsys.readouterr()
+
+    _envelope_df(spark, n=12, start_offset=20, extra_field=True).write.mode(
+        "append"
+    ).parquet(str(src))
+    collector._test_sources["ticks"] = str(src)
+    (report,) = collector.run(["ticks"]).reports
+    root = collector.output_root("ticks")
+    (versioned,) = [t for t in report.committed if t != root]
+    assert versioned.startswith(f"{root}_v")
+    assert report.committed == {versioned: 12}
+    assert report.rows_written == 0
+    assert (report.validation.status, report.validation.actual) == (PASS, 20)
+    assert spark.read.parquet(versioned).count() == 12
+
+    _envelope_df(spark, n=5, start_offset=32, extra_field=True).write.mode(
+        "append"
+    ).parquet(str(src))
+    assert collector_main(argv) == 0
+    out = capsys.readouterr().out.splitlines()
+    assert f"ticks: drift table {versioned} rows=5" in out
+    (line,) = [ln for ln in out if ln.startswith("ticks: rows=")]
+    assert "rows=0 rows_in=5 " in line
 
 
 def test_checkpoint_loss_recovery_via_offset_backstop(spark, tmp_path):

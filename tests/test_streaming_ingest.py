@@ -67,7 +67,7 @@ def _run_stream(spark, tmp_path, cfg, source_dir, out, ckpt):
     stream = (
         spark.readStream.schema(ENVELOPE_COLS).parquet(source_dir)
     )
-    ingest_available_now(spark, stream, out, ckpt, cfg)
+    return ingest_available_now(spark, stream, out, ckpt, cfg)
 
 
 def test_ingest_end_to_end(spark, tmp_path, cfg):
@@ -175,11 +175,13 @@ def test_schema_drift_creates_version_table(spark, tmp_path, cfg):
 
     _run_stream(spark, tmp_path, cfg, src1, out, str(tmp_path / "ck1"))
     base_count = spark.read.parquet(out).count()
-    _run_stream(spark, tmp_path, cfg, src2, out, str(tmp_path / "ck2"))
+    drain = _run_stream(spark, tmp_path, cfg, src2, out, str(tmp_path / "ck2"))
 
     assert spark.read.parquet(out).count() == base_count  # base intact
     versioned = [p for p in tmp_path.iterdir() if p.name.startswith("table_v")]
     assert len(versioned) == 1
+    # the drain reports the drifted rows against the versioned table only
+    assert drain.committed == {str(versioned[0]): 20}
     vdf = spark.read.parquet(str(versioned[0]))
     assert vdf.count() == 20 and "new_col" in vdf.columns
     # union read across versions (U1)
