@@ -33,9 +33,9 @@ class MsgpackError(ValueError):
 # r17 hot-loop shape (identical bytes/objects): the decode chain built a
 # fresh dict literal per scalar and re-parsed a format string per struct
 # call — both hoisted to module level, with `struct.Struct` unpackers
-# precompiled once. Driver-side profile of the tiny-event roundtrip
-# (profile_codecs_r17.py msgpack_roundtrip) put the per-call dict
-# allocations and struct format parsing inside `_unpack`/`_pack_int`.
+# precompiled once. A driver-side profile of the tiny-event roundtrip
+# put the per-call dict allocations and struct format parsing inside
+# `_unpack`/`_pack_int`.
 _P_BB = struct.Struct(">BB").pack
 _P_BH = struct.Struct(">BH").pack
 _P_BI = struct.Struct(">BI").pack

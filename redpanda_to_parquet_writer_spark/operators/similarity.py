@@ -257,9 +257,8 @@ def ivf_assign(
     rewrite (no groupBy exchange) was priced and REJECTED — Spark never
     codegens higher-order functions, and the interpreted per-centroid
     struct fold measured +36-62% on every ANN bench row containing the
-    assignment (scripts/ab_ann_r17.py; same finding as jaccard_pairs'
-    posting-list note). The codegen'd join fan-out + max_by collapse
-    stays.
+    assignment (same finding as jaccard_pairs' posting-list note). The
+    codegen'd join fan-out + max_by collapse stays.
     """
     scored = df.join(F.broadcast(centroids)).withColumn(
         "__sim", cosine(F.col(vec_col), F.col(centroid_vec_col))
@@ -521,17 +520,6 @@ def append_ivf_index(
     _write_ivf_rows(df, centroids, path, id_col, vec_col, "append")
 
 
-def append_ivf_index_arrow(
-    df: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """`append_ivf_index` with the vectorized assignment path."""
-    _write_ivf_rows(df, centroids, path, id_col, vec_col, "append", use_arrow=True)
-
-
 def _batch_matrix(pdf, vec_col: str, dim: int):
     """Build one Arrow batch's (n x dim) float64 matrix, flagging dirty
     rows instead of letting numpy densify a NULL/ragged column into a
@@ -691,7 +679,7 @@ def _materialize_probes(probes: DataFrame, reliable: bool) -> DataFrame:
     # reliable RDD checkpoint runs a SECOND job to write the checkpoint
     # files, which would recompute the probe sub-plan from scratch;
     # caching first lets that write read cached blocks instead (the
-    # same discipline as dedup.py's _ckpt_fresh_stats)
+    # same discipline as dedup.py's _materialize_flagged)
     probes = probes.persist()
     try:
         return probes.checkpoint(eager=True)
@@ -2248,8 +2236,7 @@ def pq_encode(
     r17 note: a one-row `__cbs` broadcast array + per-subspace
     `array_min(transform(...))` argmin (zero shuffle) was priced and
     REJECTED — interpreted HOF evaluation of ksub struct folds per row
-    measured +27% on `ann_pq_adc_topk` vs this codegen'd join+aggregate
-    (scripts/ab_ann_r17.py).
+    measured +27% on `ann_pq_adc_topk` vs this codegen'd join+aggregate.
     """
     _pq_check(m, dim)
     width = dim // m
@@ -2343,10 +2330,10 @@ def ivfadc_topk(
     the subspace explode IN-TASK carrying cluster_id, then the code
     argmin — removing this SortMergeJoin, its re-sort Exchanges and the
     second corpus scan) was priced and REJECTED: min-of-6 interleaved
-    A/B read 1.56-1.90s fused vs 1.37-1.54s composed
-    (scripts/ab_one_r17.py). The composition wins because BOTH groupBys
-    shuffle only narrow pre-aggregated state (the optimizer prunes the
-    unused first(v) from the assignment aggregate) and the SMJ
+    A/B read 1.56-1.90s fused vs 1.37-1.54s composed. The composition
+    wins because BOTH groupBys shuffle only narrow pre-aggregated state
+    (the optimizer prunes the unused first(v) from the assignment
+    aggregate) and the SMJ
     re-attaches small (id, cluster_id) rows — while the fused lineage
     must carry the full vector THROUGH the argmax exchange to slice it
     afterwards, i.e. it moves the heavy bytes through a shuffle the
@@ -2653,7 +2640,7 @@ def _lloyd_assign_once(v: DataFrame, cents: DataFrame, id_col: str) -> DataFrame
     r17 note: the one-row-broadcast-array + `array_min(transform(...))`
     rewrite (no per-update groupBy exchange) was priced and REJECTED
     with the `ivf_assign`/`pq_encode` HOF rewrites — flat at k=8 and
-    +60% on `ann_kmeans_recall_audit` (scripts/ab_ann_r17.py)."""
+    +60% on `ann_kmeans_recall_audit`."""
     scored = v.join(F.broadcast(cents)).withColumn(
         "dist", F.round(sq_dist(F.col("v"), F.col("cv")), 6)
     )

@@ -54,6 +54,10 @@ from redpanda_to_parquet_writer_spark.streaming.sink import (
 )
 
 
+#: payloads sampled per micro-batch to infer its schema
+SCHEMA_SAMPLE_ROWS = 50
+
+
 def envelope_values(batch_df: DataFrame, fmt: str = "json") -> DataFrame:
     """Kafka-shaped batch -> envelope whose `value` holds JSON text or
     bytes: MessagePack payloads (`fmt == "msgpack"`) are converted to
@@ -73,7 +77,6 @@ def prepare_envelope_batch(
     spark: SparkSession,
     batch_df: DataFrame,
     payload_schema: StructType | None = None,
-    sample_size: int = 50,
     fmt: str = "json",
 ) -> DataFrame:
     """Kafka-shaped batch -> flat, dated, reference-schema frame.
@@ -81,12 +84,12 @@ def prepare_envelope_batch(
     decode (P1) -> flatten (P2) -> envelope columns first (P3) -> drop
     null timestamps (P5) -> event-date partition column (F1/T4).
 
-    When `payload_schema` is None it is inferred from a bounded sample of
-    this batch (the per-micro-batch dynamic schema path). `fmt` is the
-    topic's sampled verdict (S5): MessagePack payloads convert to JSON
-    strings first (`envelope_values`), then share the JSON
-    inference/decode path — one decoder per topic, never a per-row
-    format cascade (collector:223-256).
+    When `payload_schema` is None it is inferred from at most
+    `SCHEMA_SAMPLE_ROWS` non-null payloads of this batch (the
+    per-micro-batch dynamic schema path). `fmt` is the topic's sampled
+    verdict (S5): MessagePack payloads convert to JSON strings first
+    (`envelope_values`), then share the JSON inference/decode path — one
+    decoder per topic, never a per-row format cascade (collector:223-256).
     """
     env = envelope_values(batch_df, fmt)
     if payload_schema is None:
@@ -94,7 +97,7 @@ def prepare_envelope_batch(
             r["value"]
             for r in env.select(F.col("value").cast("string").alias("value"))
             .filter(F.col("value").isNotNull())
-            .limit(sample_size)
+            .limit(SCHEMA_SAMPLE_ROWS)
             .collect()
         ]
         if not sample:
@@ -113,7 +116,6 @@ def make_merge_batch_writer(
     spark: SparkSession,
     output_root: str,
     cfg: EngineConfig,
-    payload_schema: StructType | None = None,
     fmt: str = "json",
     committed: dict[str, int] | None = None,
 ) -> Callable[[DataFrame, int], None]:
@@ -132,16 +134,13 @@ def make_merge_batch_writer(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # convert payloads before persisting: the dynamic-schema path
-        # reads the batch more than once (schema sample, the anti-join's
-        # distinct dates, the write), and each read then hits the cached,
-        # already-converted rows instead of re-running the source and UDF
-        env = envelope_values(batch_df, fmt)
-        cached = payload_schema is None
-        if cached:
-            env.persist()
+        # convert payloads before persisting: the batch is read more
+        # than once (schema sample, the anti-join's distinct dates, the
+        # write), and each read then hits the cached, already-converted
+        # rows instead of re-running the source and UDF
+        env = envelope_values(batch_df, fmt).persist()
         try:
-            prepared = prepare_envelope_batch(spark, env, payload_schema)
+            prepared = prepare_envelope_batch(spark, env)
             if not prepared.columns:
                 return
             target = output_root
@@ -160,8 +159,7 @@ def make_merge_batch_writer(
             if committed is not None:
                 committed[target] = committed.get(target, 0) + rows
         finally:
-            if cached:
-                env.unpersist()
+            env.unpersist()
 
     return write_batch
 
@@ -208,7 +206,6 @@ def ingest_available_now(
     output_root: str,
     checkpoint_dir: str,
     cfg: EngineConfig | None = None,
-    payload_schema: StructType | None = None,
     query_name: str | None = None,
     fmt: str = "json",
 ) -> DrainReport:
@@ -228,7 +225,7 @@ def ingest_available_now(
     cfg = cfg or EngineConfig()
     committed: dict[str, int] = {}
     writer = make_merge_batch_writer(
-        spark, output_root, cfg, payload_schema, fmt=fmt, committed=committed
+        spark, output_root, cfg, fmt=fmt, committed=committed
     )
     stream = source.writeStream.foreachBatch(writer)
     if query_name:

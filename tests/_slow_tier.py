@@ -23,7 +23,7 @@ into a soak.
 
 SLOW_TIER = {
     "test_plan_quality.py::test_no_cartesian_products",  # 97.8s
-    "test_cc_and_redaction.py::test_cc_star_equals_labelprop_on_random_graphs",  # 45.2s
+    "test_cc_and_redaction.py::test_cc_matches_union_find_on_random_graphs",  # 45.2s
     "test_streaming_sf1.py::test_streaming_row_matches_batch_oracle_at_sf1[streaming_session_stats]",  # 42.4s
     "test_properties.py::test_vector_operators_survive_degenerate_corpus",  # 20.7s
     "test_fuzz_smoke.py::test_fuzz_family_smoke[chunked_serve]",  # 17.1s
